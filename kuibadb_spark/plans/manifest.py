@@ -5,7 +5,8 @@ gives atomic multi-file commit and snapshot reads; with immutable parquet
 there is no WAL/CLOG/MVCC left to replicate, only the manifest swap.
 
 Durability trick is the reference's own (src/utils.rs:287-301 `persist`):
-write a temp file, fsync, rename into place, fsync the directory.
+write a temp file, fsync, rename into place, fsync the directory — one
+private pair (_write_temps, _rename_temps) that every writer shares.
 
 Readers pin a version: a DataFrame built from a manifest's explicit file
 list never sees later commits (snapshot isolation per query — the
@@ -165,9 +166,7 @@ def commit_files(table_dir: str, new_files: list[str], base_version: int,
             )
         _verify_files_exist(new_files, table_dir)
         m["version"] += 1
-        m["files"] = m["files"] + list(new_files)
-        m.setdefault("stats_by_file", {}).update(stats or {})
-        m["props"].update(props or {})
+        _apply_delta(m, new_files, False, stats, props)
         _persist(table_dir, m)
         return m
 
@@ -197,15 +196,30 @@ def replace_files(table_dir: str, new_files: list[str], base_version: int,
             )
         _verify_files_exist(new_files, table_dir)
         m["version"] += 1
-        m["files"] = list(new_files)
-        old_stats = m.get("stats_by_file", {})
-        m["stats_by_file"] = {
-            f: old_stats[f] for f in new_files if f in old_stats
-        }
-        m["stats_by_file"].update(stats or {})
-        m["props"].update(props or {})
+        _apply_delta(m, new_files, True, stats, props)
         _persist(table_dir, m)
         return m
+
+
+def _apply_delta(m: dict, files: list[str], replace: bool,
+                 stats: dict | None, props: dict | None) -> None:
+    """The one rule for merging a file-list change into a manifest, in
+    place: append `files` (or, with `replace`, make them the whole list
+    and keep only the zone maps of files that survive), add the new
+    files' zone maps `stats`, merge `props`. Shared by the two autocommit
+    swaps above and Engine's staged transaction manifest. Private and
+    I/O-free: the public publish functions are traced and
+    fault-injected by module attribute, so none of them may nest
+    another."""
+    if replace:
+        old = m.get("stats_by_file", {})
+        m["files"] = list(files)
+        m["stats_by_file"] = {f: old[f] for f in files if f in old}
+    else:
+        m["files"] = m["files"] + list(files)
+        m.setdefault("stats_by_file", {})
+    m["stats_by_file"].update(stats or {})
+    m["props"].update(props or {})
 
 
 def _metadata_only_drift(table_dir: str, base_version: int,
@@ -288,18 +302,7 @@ def prepare_publish(table_dir: str, staged: dict, base_version: int) -> dict:
     _verify_files_exist(staged.get("files", []), table_dir)
     out = dict(staged)
     out["version"] = base_version + 1
-    out["crc32"] = _payload_crc(out)
-    token = uuid.uuid4().hex[:8]
-    tmp = manifest_path(table_dir) + f".{token}.tmp"
-    vpath = os.path.join(table_dir, f"manifest.v{out['version']}.json")
-    vtmp = vpath + f".{token}.tmp"
-    for p in (tmp, vtmp):
-        with open(p, "w") as f:
-            json.dump(out, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-    return {"table_dir": table_dir, "tmp": tmp, "vtmp": vtmp,
-            "vpath": vpath, "manifest": out}
+    return _write_temps(table_dir, out)
 
 
 def finish_publish(handle: dict) -> dict:
@@ -313,15 +316,7 @@ def finish_publish(handle: dict) -> dict:
     manifest.vN.json with no manifest.json pointing at version N is
     inert (read_manifest_version is only reachable for published
     versions, and gc/trim reap orphans)."""
-    table_dir = handle["table_dir"]
-    os.rename(handle["vtmp"], handle["vpath"])
-    os.rename(handle["tmp"], manifest_path(table_dir))
-    dfd = os.open(table_dir, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
-    return handle["manifest"]
+    return _rename_temps(handle)
 
 
 def publish_landed(handle: dict) -> bool:
@@ -374,26 +369,6 @@ def abort_publish(handle: dict) -> None:
             pass
 
 
-def publish_held(table_dir: str, staged: dict, base_version: int) -> dict:
-    """publish() body WITHOUT acquiring the commit lock — for callers
-    that already hold it via multi_commit_lock (Engine.commit publishing
-    several tables under one lock set). The version check is still
-    enforced (defense in depth)."""
-    return finish_publish(prepare_publish(table_dir, staged, base_version))
-
-
-def publish(table_dir: str, staged: dict, base_version: int) -> dict:
-    """Transaction commit point: swap in a fully-staged manifest as the
-    next version. A session transaction (engine.begin()) accumulates any
-    number of DML statements into one staged dict; COMMIT publishes it as
-    ONE new version — the reference's single commit record per transaction
-    (src/access/xact.rs:215-733). Same optimistic check as commit_files:
-    if the on-disk manifest moved past the transaction's base, the whole
-    transaction fails with SerializationFailure (first-committer-wins)."""
-    with commit_lock(table_dir):
-        return publish_held(table_dir, staged, base_version)
-
-
 def read_manifest_version(table_dir: str, version: int) -> dict:
     """Time travel: read a historical manifest (kept per-version, like the
     reference's checkpointed control-file copies, wal.rs:88-196)."""
@@ -423,31 +398,43 @@ def trim_versions(table_dir: str, keep: int) -> int:
 
 
 def _persist(table_dir: str, m: dict) -> None:
-    # temp file + fsync + rename + dir fsync (reference src/utils.rs:287-301);
-    # unique tmp name: concurrent committers must never share a temp path.
-    # The time-travel version copy lands BEFORE the manifest.json rename
-    # (same tmp+fsync+rename pattern): the commit point must be the LAST
-    # rename (DESIGN.md #31) — the old order could leave a live version
-    # with a missing or torn manifest.vN.json if interrupted between the
-    # two writes, while a stray manifest.vN.json with no manifest.json at
-    # N is inert.
-    token = uuid.uuid4().hex[:8]
+    # one-table write with no two-phase window: both halves back to back
+    _rename_temps(_write_temps(table_dir, m))
+
+
+def _write_temps(table_dir: str, m: dict) -> dict:
+    """The durable writer's first half: stamp the CRC and write `m` to
+    fsync'd temp files for manifest.json and its time-travel copy
+    manifest.vN.json (reference src/utils.rs:287-301). Unique temp
+    names: concurrent committers must never share a temp path. Returns
+    the handle _rename_temps takes."""
     m["crc32"] = _payload_crc(m)
+    token = uuid.uuid4().hex[:8]
     vpath = os.path.join(table_dir, f"manifest.v{m['version']}.json")
-    vtmp = vpath + f".{token}.tmp"
-    tmp = manifest_path(table_dir) + f".{token}.tmp"
-    for p in (vtmp, tmp):
+    h = {"table_dir": table_dir, "vpath": vpath,
+         "vtmp": vpath + f".{token}.tmp",
+         "tmp": manifest_path(table_dir) + f".{token}.tmp", "manifest": m}
+    for p in (h["vtmp"], h["tmp"]):
         with open(p, "w") as f:
             json.dump(m, f, indent=1)
             f.flush()
             os.fsync(f.fileno())
-    os.rename(vtmp, vpath)
-    os.rename(tmp, manifest_path(table_dir))
-    dfd = os.open(table_dir, os.O_RDONLY)
+    return h
+
+
+def _rename_temps(h: dict) -> dict:
+    """The durable writer's second half: rename the version copy, then
+    manifest.json — the commit point, always the LAST rename (see
+    finish_publish) — then fsync the table directory. Returns the
+    published manifest."""
+    os.rename(h["vtmp"], h["vpath"])
+    os.rename(h["tmp"], manifest_path(h["table_dir"]))
+    dfd = os.open(h["table_dir"], os.O_RDONLY)
     try:
         os.fsync(dfd)
     finally:
         os.close(dfd)
+    return h["manifest"]
 
 
 def update_props(table_dir: str, updater) -> dict:

@@ -270,6 +270,7 @@ def write_stream_to_table(events: DataFrame, engine, name: str,
     the manifest — no external metastore. Returns the StreamingQuery
     (caller drives/stops it); use trigger(availableNow) semantics by
     letting the finite parquet source drain via processAllAvailable."""
+    from kuibadb_spark.engine import Engine
     from kuibadb_spark.plans import manifest as mf
 
     # The replay guard is keyed by the STREAMING QUERY id (round-6
@@ -295,13 +296,18 @@ def write_stream_to_table(events: DataFrame, engine, name: str,
                 qid["v"] = "default"
         return qid["v"]
 
+    # Batches commit through the sink's own autocommit engine: one landing
+    # in a transaction the caller has open would vanish on its ROLLBACK
+    # while the checkpoint already marks the batch done.
+    writer = Engine(engine.spark, engine.warehouse)
+
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tdir = engine._table_dir(name)
+        tdir = writer._table_dir(name)
         prop = f"stream_last_batch::{_query_key()}"
         last = mf.read_manifest(tdir)["props"].get(prop, -1)
         if batch_id <= last:
             return  # replayed batch after restart — already committed
-        engine.insert(name, batch_df, props_update={prop: batch_id})
+        writer.insert(name, batch_df, props_update={prop: batch_id})
 
     return (
         events.writeStream

@@ -600,3 +600,23 @@ def test_copy_from_auto_width_loads(spark, tmp_path):
     n = engine.copy_from("t_auto", str(src))
     assert n == 1000
     assert engine.sql("SELECT count(*) AS c FROM t_auto").collect()[0].c == 1000
+
+
+def test_failed_ctas_and_mv_leave_no_table(engine):
+    """CREATE TABLE … AS and CREATE MATERIALIZED VIEW are atomic, like
+    PG's CTAS: when the load fails (here an ANSI cast error), the table
+    the statement created is dropped again, the load's own error
+    propagates, and a retry does not hit DuplicateTable."""
+    engine.sql("CREATE TABLE src (a INT, b STRING)")
+    engine.sql("INSERT INTO src VALUES (1, 'x'), (2, '7')")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        engine.sql("CREATE TABLE c AS SELECT CAST(b AS INT) AS n FROM src")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        engine.sql(
+            "CREATE MATERIALIZED VIEW mv AS SELECT CAST(b AS INT) AS n FROM src"
+        )
+    assert engine.tables() == ["src"]
+    engine.sql("CREATE TABLE c AS SELECT a FROM src")
+    engine.sql("CREATE MATERIALIZED VIEW mv AS SELECT a FROM src WHERE a > 1")
+    assert engine.table("c").count() == 2
+    assert [r.a for r in engine.table("mv").collect()] == [2]

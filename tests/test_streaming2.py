@@ -326,6 +326,45 @@ def test_stream_into_engine_table(spark, sf_dir, tmp_path):
     assert mf.read_manifest(engine._table_dir("ing"))["version"] == v_after_first
 
 
+
+def test_stream_sinks_commit_outside_an_open_transaction(spark, tmp_path):
+    """Both streaming sinks — write_stream_to_table and
+    stream_refresh_materialized_view — commit each batch on their own.
+    A transaction the caller's engine has open must not absorb them:
+    its ROLLBACK would silently drop batches the checkpoint already
+    marks done."""
+    from kuibadb_spark.engine import Engine
+    from kuibadb_spark.streaming.events import write_stream_to_table
+
+    wh = str(tmp_path / "wh")
+    engine = Engine(spark, warehouse=wh)
+    engine.create_table("src", "a INT, b STRING")
+    engine.insert("src", spark.createDataFrame(
+        [(1, "x"), (2, "y"), (3, "x")], "a INT, b STRING"))
+    engine.create_table("s", "a INT, b STRING")
+    engine.sql("CREATE MATERIALIZED VIEW mv AS "
+               "SELECT b, count(*) AS n FROM src GROUP BY b")
+    engine.insert("src", spark.createDataFrame([(4, "z")], "a INT, b STRING"))
+
+    engine.begin()
+    queries = [
+        write_stream_to_table(engine.stream("src"), engine, "s",
+                              str(tmp_path / "ck_s")),
+        engine.stream_refresh_materialized_view("mv", str(tmp_path / "ck_mv")),
+    ]
+    for q in queries:
+        try:
+            q.processAllAvailable()
+            assert q.exception() is None
+        finally:
+            q.stop()
+    engine.rollback()
+
+    fresh = Engine(spark, warehouse=wh)
+    assert fresh.table("s").count() == 4
+    assert {tuple(r) for r in fresh.table("mv").collect()} == {
+        ("x", 2), ("y", 1), ("z", 1)}
+
 def test_cdc_loop_composes(spark, sf_dir, tmp_path):
     """Full lakehouse CDC chain: external stream → manifest table →
     table-as-stream → downstream aggregate table. Proves the streaming
