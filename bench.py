@@ -47,7 +47,7 @@ HEADLINE = [
     # round 2: one headliner per previously-unbenched family so
     # round-over-round regressions are visible where new work lands
     "sim_ann_pq",               # product-quantized ANN
-    "text_dsir_importance",     # DSIR importance weighting (curation)
+    "text_dsir_importance",     # DSIR importance weighting
     "rec_part_hierarchy_depth", # recursive CTE family (log-depth — the
                                 # recursion shape a BSP engine is good
                                 # at; rec_price_streaks' 24-step linear
@@ -99,7 +99,7 @@ HEADLINE = [
     "dedup_bbit_minhash",       # b-bit minhash compaction
     "sim_ann_multiprobe",       # multiprobe LSH ANN
     # round 6: representatives of the r6 grading window (the remaining
-    # curation6-14 families), guarded the round they grade — same
+    # round-6 families), guarded the round they grade — same
     # discipline as r3-r5
     "graph_label_propagation",  # synchronous LPA community detection
     "mm_phash_dct",             # 8x8 DCT perceptual hash
@@ -112,13 +112,13 @@ HEADLINE = [
     # docstring — and the recursive family regression guard is
     # rec_part_hierarchy_depth, the log-depth shape a BSP engine is
     # actually good at)
-    # round 7: the curation15 additions, guarded the round they land
+    # round 7: the round-7 additions, guarded the round they land
     "text_chunk_overlap",       # RAG sliding-window chunking ledger
     "text_quality_robust_z",    # median/MAD robust outlier audit
     "text_cross_source_overlap",  # df-capped source contamination matrix
     "sim_dim_energy_profile",   # matryoshka prefix-energy audit
     "dedup_tokens_saved",       # exact-dedup token-savings ledger
-    # round 7 batches 2-3 (curation16/17)
+    # round 7 batches 2-3
     "sample_epoch_schedule",    # data-constrained repeat schedule
     "dedup_shingle_df_spectrum",  # df-cap justification spectrum
     "sim_centroid_confusion",   # label-centroid cosine matrix
@@ -126,13 +126,13 @@ HEADLINE = [
     "ev_bot_decile_screen",     # decile-based bot screen
     "text_ngram_coverage_curve",  # tokenizer coverage curve
     "sample_dedup_aware_mixture",  # dedup-aware mixture shares
-    # round 8: the curation18 additions, guarded the round they land
+    # round 8: the round-8 additions, guarded the round they land
     "w_decile_bands_orders",    # fact-scale distributed decile bands
     "text_length_decile_bands",  # corpus length profile (distributed ntile)
     "graph_degree_assortativity",  # exact-moment degree Pearson
     "sample_holdout_contamination",  # train/holdout 5-gram leakage audit
     "dedup_cluster_size_spectrum",  # exact-dup cluster-size bands
-    # round 8 batch 2 (curation19)
+    # round 8 batch 2
     "text_ocr_artifact_screen",   # OCR/garbage rule screen
     "ev_dau_wau_stickiness",      # DAU/WAU engagement ratio
     "sample_boundary_hash_split",  # md5-bucket 80/10/10 split audit
@@ -142,10 +142,10 @@ HEADLINE = [
     # (ev_concurrent_sessions' bounded top-k form is already guarded
     # above; the Fano keys changed formula, not shape)
     "w_pareto_abc",               # distributed prefix-sum cumulative share
-    # round 9 batch 2 (curation20), guarded the round they land
+    # round 9 batch 2, guarded the round they land
     "ev_interarrival_spectrum",   # log2 gap spectrum (lag + narrow agg)
     "sample_quota_per_source",    # per-source top-5 quality quota
-    # round 10 (curation21), guarded the round they land
+    # round 10, guarded the round they land
     "sample_curriculum_order",    # 5-phase distributed-ntile curriculum
     "graph_source_modularity",    # source-partition near-dup modularity
     "text_gini_token_concentration",  # 128-bit exact per-source Gini

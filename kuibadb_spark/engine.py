@@ -114,9 +114,11 @@ _DELETE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
+    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_WHERE_RE = re.compile(r"\s+WHERE\s+", re.IGNORECASE)
+_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 _ALTER_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(\w+)\s+"
     r"(?:ADD\s+COLUMN\s+(\w+)\s+([\w()<>, ]+?)|DROP\s+COLUMN\s+(\w+))\s*;?\s*$",
@@ -262,13 +264,12 @@ def _split_statements(script: str) -> list[str]:
     return stmts
 
 
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas at paren depth 0 and outside string literals —
-    enough for an UPDATE's SET list (exprs may contain calls/strings)."""
-    parts: list[str] = []
-    cur: list[str] = []
+def _top_level(s: str) -> set[int]:
+    """Indexes of the characters of `s` at paren depth 0 and outside
+    string literals."""
+    out: set[int] = set()
     depth, in_str = 0, False
-    for ch in s:
+    for i, ch in enumerate(s):
         if in_str:
             in_str = ch != "'"
         elif ch == "'":
@@ -277,13 +278,34 @@ def _split_top_level(s: str) -> list[str]:
             depth += 1
         elif ch in ")]":
             depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-            continue
-        cur.append(ch)
-    parts.append("".join(cur).strip())
+        elif depth == 0:
+            out.add(i)
+    return out
+
+
+def _split_top_level(s: str) -> list[str]:
+    """Split on commas at paren depth 0 and outside string literals —
+    enough for an UPDATE's SET list (exprs may contain calls/strings)."""
+    top = _top_level(s)
+    parts: list[str] = []
+    start = 0
+    for i, ch in enumerate(s):
+        if ch == "," and i in top:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    parts.append(s[start:].strip())
     return parts
+
+
+def _split_where(s: str) -> tuple[str, str | None]:
+    """Split an UPDATE's `SET … [WHERE …]` tail at the first WHERE at
+    paren depth 0 and outside string literals, so a WHERE inside a
+    literal or a subquery stays part of its SET expression."""
+    top = _top_level(s)
+    for m in _WHERE_RE.finditer(s):
+        if m.start() in top:
+            return s[:m.start()], s[m.end():]
+    return s, None
 
 
 class Engine:
@@ -482,11 +504,14 @@ class Engine:
             return self.spark.createDataFrame([(n,)], "count BIGINT")
         m = _UPDATE_RE.match(text)
         if m:
+            if _SUBQUERY_RE.search(text):
+                self._register_all()  # a subquery reads current snapshots
+            set_list, where = _split_where(m.group(2))
             assignments = {}
-            for part in _split_top_level(m.group(2)):
+            for part in _split_top_level(set_list):
                 col, expr = part.split("=", 1)
                 assignments[col.strip()] = expr.strip()
-            n = self.update(m.group(1), assignments, m.group(3) or "true")
+            n = self.update(m.group(1), assignments, where or "true")
             return self.spark.createDataFrame([(n,)], "count BIGINT")
         self._register_all()
         # time travel: rewrite `t FOR VERSION AS OF n` to a temp view

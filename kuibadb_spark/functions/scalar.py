@@ -27,9 +27,10 @@ Cross-engine rules learned by probing, encoded here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kuibadb_spark.catalog import load
+
 
 # Derived typed source: one expression list, two dialect spellings.
 # (alias, spark_expr, duck_expr); duck_expr=None → same as spark_expr.
@@ -305,3 +306,103 @@ QUERIES = {}
 ORACLES = {}
 for _name, _exprs in _FAMILIES.items():
     QUERIES[_name], ORACLES[_name] = _make_query(_exprs)
+
+
+# --------------------------------------------------------------------------
+# try_* error-safe arithmetic (the NULL-on-failure complement of ANSI mode)
+# --------------------------------------------------------------------------
+def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The engine runs ANSI mode (overflow/div-zero/bad-cast RAISE,
+    matching the reference's checked arithmetic — adt.rs:29-33); the
+    try_* family is the explicit opt-OUT: NULL on failure instead of an
+    error, per expression. Exercises try_divide (÷0 and interval),
+    try_add overflow at the BIGINT edge, try_cast on malformed input,
+    and try_element_at past the end — each against a DuckDB equivalent
+    spelled with TRY_CAST/NULLIF/CASE guards."""
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
+    big = 9_223_372_036_854_775_807  # BIGINT max
+    return (
+        o.selectExpr(
+            "o_orderkey",
+            "try_divide(o_totalprice, o_orderkey % 3) AS div_maybe_zero",
+            f"try_add({big}L, o_orderkey) AS add_overflow",
+            "try_add(o_orderkey, 1) AS add_ok",
+            "try_cast(CASE WHEN o_orderkey % 2 = 0 THEN 'not-a-number' "
+            "ELSE CAST(o_orderkey AS STRING) END AS BIGINT) AS cast_maybe",
+            "try_element_at(array(1, 2, 3), CAST(o_orderkey % 5 AS INT) + 1)"
+            " AS elem_maybe",
+        )
+        .orderBy("o_orderkey")
+    )
+
+
+QUERIES["scalar_try_arithmetic"] = scalar_try_arithmetic
+
+ORACLES["scalar_try_arithmetic"] = """
+    SELECT o_orderkey,
+           o_totalprice / NULLIF(o_orderkey % 3, 0) AS div_maybe_zero,
+           CASE WHEN o_orderkey > 0 THEN NULL
+                ELSE 9223372036854775807 + o_orderkey END AS add_overflow,
+           o_orderkey + 1 AS add_ok,
+           TRY_CAST(CASE WHEN o_orderkey % 2 = 0 THEN 'not-a-number'
+                         ELSE CAST(o_orderkey AS VARCHAR) END AS BIGINT)
+               AS cast_maybe,
+           CASE WHEN o_orderkey % 5 + 1 <= 3
+                THEN CAST(o_orderkey % 5 + 1 AS INT) END AS elem_maybe
+    FROM orders
+    WHERE o_orderkey < 1000
+    ORDER BY o_orderkey
+"""
+
+
+# ---------------------------------------------------------------------------
+# regex scalar family
+# ---------------------------------------------------------------------------
+def scalar_regex_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The regex scalar surface over real column data: extract, replace,
+    count, boolean match, and split-count — the §2.2 family the string
+    matrix only grazes. Patterns are restricted to the Java-regex ∩ RE2
+    common core (character classes, bounded repetition, anchors) so
+    both engines agree byte-for-byte; inputs are the customer name plus
+    a record-code string synthesized from fixture columns (the fixture
+    ships no phone column)."""
+    c = load(spark, sf_dir, "customer").filter("c_custkey % 3 = 0")
+    code = ("concat(CAST(c_nationkey AS STRING), '-',"
+            " CAST(c_custkey AS STRING), '-', c_mktsegment)")
+    return (
+        c.selectExpr(
+            "c_custkey",
+            f"regexp_extract({code}, '^([0-9]+)-', 1) AS nation_code",
+            f"regexp_replace({code}, '[0-9]', '#') AS masked_code",
+            f"size(regexp_extract_all({code}, '[0-9]+', 0)) AS digit_runs",
+            f"CAST({code} RLIKE '^[0-9]{{2}}-' AS INT) AS has_cc2",
+            r"size(split(c_name, '[#]+')) AS name_parts",
+            "regexp_extract(c_name, '([0-9]+)$', 1) AS name_suffix",
+            f"regexp_extract({code}, '([A-Z]+)$', 1) AS segment_caps",
+        )
+        .orderBy("c_custkey")
+    )
+
+
+QUERIES["scalar_regex_ops"] = scalar_regex_ops
+
+ORACLES["scalar_regex_ops"] = """
+    WITH c AS (
+        SELECT c_custkey, c_name,
+               CAST(c_nationkey AS VARCHAR) || '-'
+               || CAST(c_custkey AS VARCHAR) || '-' || c_mktsegment AS code
+        FROM customer WHERE c_custkey % 3 = 0
+    )
+    SELECT c_custkey,
+           regexp_extract(code, '^([0-9]+)-', 1) AS nation_code,
+           regexp_replace(code, '[0-9]', '#', 'g') AS masked_code,
+           CAST(len(regexp_extract_all(code, '[0-9]+')) AS INT)
+               AS digit_runs,
+           CAST(regexp_matches(code, '^[0-9]{2}-') AS INT) AS has_cc2,
+           CAST(len(string_split_regex(c_name, '[#]+')) AS INT)
+               AS name_parts,
+           regexp_extract(c_name, '([0-9]+)$', 1) AS name_suffix,
+           regexp_extract(code, '([A-Z]+)$', 1) AS segment_caps
+    FROM c
+    ORDER BY c_custkey
+"""

@@ -179,29 +179,6 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def subq_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN with NULLs in the subquery (3-valued logic): a NULL in the
-    IN-list makes NOT IN never-true — the classic SQL trap, same in PG,
-    Spark, and DuckDB. The NULL-stripped variant returns rows."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("ks_cust_ni")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ks_ord_ni")
-    return spark.sql(
-        """
-        WITH keys AS (
-            SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
-                        ELSE o_custkey END AS k
-            FROM ks_ord_ni
-        )
-        SELECT
-            (SELECT count(*) FROM ks_cust_ni
-             WHERE c_custkey NOT IN (SELECT k FROM keys)) AS with_nulls,
-            (SELECT count(*) FROM ks_cust_ni
-             WHERE c_custkey NOT IN (SELECT k FROM keys WHERE k IS NOT NULL))
-                AS without_nulls
-        """
-    )
-
-
 def _bucket_selection_median(l: DataFrame) -> DataFrame:
     """Exact per-flag median of l_extendedprice by two-pass bucket
     selection → (l_returnflag, _exact_median). Bit-identical to
@@ -385,7 +362,6 @@ QUERIES = {
     "agg_conditional": agg_conditional,
     "agg_pivot": agg_pivot,
     "agg_unpivot": agg_unpivot,
-    "subq_not_in_nulls": subq_not_in_nulls,
     "agg_approx_sketches": agg_approx_sketches,
 }
 
@@ -503,19 +479,6 @@ ORACLES = {
         UNION ALL SELECT l_returnflag, 'price', price FROM wide
         UNION ALL SELECT l_returnflag, 'disc', disc FROM wide
         ORDER BY l_returnflag, metric
-    """,
-    "subq_not_in_nulls": """
-        WITH keys AS (
-            SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
-                        ELSE o_custkey END AS k
-            FROM orders
-        )
-        SELECT
-            (SELECT count(*) FROM customer
-             WHERE c_custkey NOT IN (SELECT k FROM keys)) AS with_nulls,
-            (SELECT count(*) FROM customer
-             WHERE c_custkey NOT IN (SELECT k FROM keys WHERE k IS NOT NULL))
-                AS without_nulls
     """,
     "agg_pivot": """
         SELECT l_returnflag,
@@ -951,4 +914,944 @@ ORACLES["agg_weighted_avg_exact"] = """
     )
     GROUP BY l_returnflag
     ORDER BY l_returnflag
+"""
+
+
+# --------------------------------------------------------------------------
+# boolean aggregates: bool_and / bool_or / count_if
+# --------------------------------------------------------------------------
+def agg_boolean_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load(spark, sf_dir, "orders")
+    return (
+        o.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.bool_and(F.col("o_totalprice") > 5000).alias("all_over_5k"),
+            F.bool_or(F.col("o_totalprice") > 400000).alias("any_over_400k"),
+            F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
+        )
+        .orderBy("o_orderpriority")
+    )
+
+
+QUERIES["agg_boolean_aggs"] = agg_boolean_aggs
+
+ORACLES["agg_boolean_aggs"] = """
+        SELECT o_orderpriority,
+               count(*) AS n_orders,
+               bool_and(o_totalprice > 5000) AS all_over_5k,
+               bool_or(o_totalprice > 400000) AS any_over_400k,
+               CAST(count_if(o_orderstatus = 'F') AS BIGINT) AS n_finished
+        FROM orders
+        GROUP BY o_orderpriority
+        ORDER BY o_orderpriority
+    """
+
+
+# --------------------------------------------------------------------------
+# salted two-phase aggregation (skew remedy as an oracled query)
+# --------------------------------------------------------------------------
+def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-phase salted aggregation over a deliberately skewed key
+    (l_returnflag has ~3 values over the whole table — every row of a
+    group lands on one reducer in the naive plan): phase 1 aggregates
+    (key, salt) with a deterministic md5 salt spreading each group over
+    8 reducers, phase 2 merges the 8 partials per key. Every aggregate
+    here is associative (count/sum/min/max — sums in exact integer
+    cents), so the result is IDENTICAL to the direct groupBy the oracle
+    spells — which is the point: salting is a physical rewrite, not a
+    semantic one. (Spark's own partial aggregation already does this
+    map-side; explicit salting is the remedy when the skew survives to
+    the REDUCE side, e.g. high-cardinality-input distincts or
+    collect_list payloads per hot key.)"""
+    from kuibadb_spark.plans.salting import salt_column
+
+    li = load(spark, sf_dir, "lineitem")
+    salted = li.withColumn("salt", salt_column(F.col("l_orderkey"), 8))
+    phase1 = salted.groupBy("l_returnflag", "salt").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).alias(
+            "cents"
+        ),
+        F.min("l_quantity").alias("mn"),
+        F.max("l_quantity").alias("mx"),
+    )
+    return (
+        phase1.groupBy("l_returnflag")
+        .agg(
+            F.sum("n").alias("n_rows"),
+            F.sum("cents").alias("revenue_cents"),
+            F.min("mn").alias("min_qty"),
+            F.max("mx").alias("max_qty"),
+            F.count(F.lit(1)).alias("n_salt_partials"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+QUERIES["agg_salted_skew"] = agg_salted_skew
+
+ORACLES["agg_salted_skew"] = """
+    WITH salted AS (
+        SELECT l_returnflag, l_extendedprice, l_quantity,
+               CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8)
+                    AS BIGINT) % 8 AS salt
+        FROM lineitem
+    ),
+    phase1 AS (
+        SELECT l_returnflag, salt, count(*) AS n,
+               sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents,
+               min(l_quantity) AS mn, max(l_quantity) AS mx
+        FROM salted GROUP BY l_returnflag, salt
+    )
+    SELECT l_returnflag,
+           CAST(sum(n) AS BIGINT) AS n_rows,
+           CAST(sum(cents) AS BIGINT) AS revenue_cents,
+           min(mn) AS min_qty,
+           max(mx) AS max_qty,
+           count(*) AS n_salt_partials
+    FROM phase1
+    GROUP BY l_returnflag
+    ORDER BY l_returnflag
+"""
+
+
+# ---------------------------------------------------------------------------
+# HLL set algebra: union + inclusion-exclusion intersection of sketches
+# ---------------------------------------------------------------------------
+def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch SET ALGEBRA — the property that makes HLL the 100 TB
+    distinct-count currency: registers for returned (R) and
+    A-status part sets merge by register-wise max into the UNION estimate without
+    rescanning either input, and inclusion-exclusion gives the
+    intersection estimate (|A|+|B|-|A∪B|) from three sketches alone.
+    Exact counterparts ride along as ground truth, including the exact
+    intersection via a both-modes semi-grouping.
+
+    Exactness discipline = agg_hll_handrolled's (aggregates.py:429): md5
+    hash, integer rho, harmonic sum kept as an exact integer at register
+    scale 2^55; the three estimates divide exact integers, and the
+    inclusion-exclusion combines those three doubles identically in both
+    engines before the single final round."""
+    li = (
+        load(spark, sf_dir, "lineitem")
+        .filter(F.col("l_returnflag").isin("A", "R"))
+        .select("l_returnflag", "l_partkey")
+    )
+    regs = (
+        li.selectExpr(
+            "l_returnflag AS grp",
+            "l_partkey",
+            "CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 15),"
+            " 16, 10) AS BIGINT) AS h",
+        )
+        .selectExpr("grp", "h % 64 AS bucket", "h div 64 AS rest")
+        .groupBy("grp", "bucket")
+        .agg(F.expr(
+            "max(least(bit_count((rest & -rest) - 1) + 1, 55))").alias("m"))
+    )
+    union_regs = (
+        regs.groupBy("bucket").agg(F.max("m").alias("m"))
+        .selectExpr("'__union__' AS grp", "bucket", "m")
+    )
+    est = (
+        regs.unionAll(union_regs)
+        .groupBy("grp")
+        .agg(
+            F.expr("sum(shiftleft(CAST(1 AS BIGINT), 55 - m))").alias("sp"),
+            F.count(F.lit(1)).alias("nr"),
+        )
+        .selectExpr(
+            "grp",
+            "0.709D * 4096 * pow(2.0D, 55)"
+            " / (sp + (64 - nr) * shiftleft(CAST(1 AS BIGINT), 55)) AS est",
+        )
+    )
+    wide = est.agg(
+        F.max(F.when(F.col("grp") == "A", F.col("est"))).alias("e_air"),
+        F.max(F.when(F.col("grp") == "R", F.col("est"))).alias("e_truck"),
+        F.max(F.when(F.col("grp") == "__union__", F.col("est"))).alias("e_un"),
+    ).selectExpr(
+        "round(e_air, 4) AS hll_a",
+        "round(e_truck, 4) AS hll_r",
+        "round(e_un, 4) AS hll_union",
+        "round(e_air + e_truck - e_un, 4) AS hll_intersection",
+    )
+    per_key = li.groupBy("l_partkey").agg(
+        F.max(F.when(F.col("l_returnflag") == "A", 1).otherwise(0)).alias("a"),
+        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("t"),
+    )
+    exact = per_key.agg(
+        F.sum("a").alias("n_exact_a"),
+        F.sum("t").alias("n_exact_r"),
+        F.count(F.lit(1)).alias("n_exact_union"),
+        F.sum(F.expr("CASE WHEN a = 1 AND t = 1 THEN 1 ELSE 0 END")).alias(
+            "n_exact_intersection"
+        ),
+    )
+    return exact.crossJoin(wide)
+
+
+QUERIES["agg_hll_set_ops"] = agg_hll_set_ops
+
+ORACLES["agg_hll_set_ops"] = """
+    WITH li AS (
+        SELECT l_returnflag, l_partkey FROM lineitem
+        WHERE l_returnflag IN ('A', 'R')
+    ),
+    br AS (
+        SELECT l_returnflag AS grp,
+               CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)
+                    AS BIGINT) % 64 AS bucket,
+               CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)
+                    AS BIGINT) // 64 AS rest
+        FROM li
+    ),
+    regs AS (
+        SELECT grp, bucket,
+               max(least(bit_count((rest & -rest) - 1) + 1, 55)) AS m
+        FROM br GROUP BY grp, bucket
+    ),
+    union_regs AS (
+        SELECT '__union__' AS grp, bucket, max(m) AS m
+        FROM regs GROUP BY bucket
+    ),
+    allregs AS (SELECT * FROM regs UNION ALL SELECT * FROM union_regs),
+    est AS (
+        SELECT grp,
+               CAST(0.709 AS DOUBLE) * 4096 * pow(2.0, 55)
+               / (CAST(sum(CAST(1 AS BIGINT) << (55 - m)) AS BIGINT)
+                  + (64 - count(*)) * (CAST(1 AS BIGINT) << 55)) AS est
+        FROM allregs GROUP BY grp
+    ),
+    wide AS (
+        SELECT round(max(CASE WHEN grp = 'A' THEN est END), 4) AS hll_a,
+               round(max(CASE WHEN grp = 'R' THEN est END), 4)
+                   AS hll_r,
+               round(max(CASE WHEN grp = '__union__' THEN est END), 4)
+                   AS hll_union,
+               round(max(CASE WHEN grp = 'A' THEN est END)
+                     + max(CASE WHEN grp = 'R' THEN est END)
+                     - max(CASE WHEN grp = '__union__' THEN est END), 4)
+                   AS hll_intersection
+        FROM est
+    ),
+    per_key AS (
+        SELECT l_partkey,
+               max(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS a,
+               max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS t
+        FROM li GROUP BY l_partkey
+    ),
+    exact AS (
+        SELECT CAST(sum(a) AS BIGINT) AS n_exact_a,
+               CAST(sum(t) AS BIGINT) AS n_exact_r,
+               count(*) AS n_exact_union,
+               CAST(sum(CASE WHEN a = 1 AND t = 1 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_exact_intersection
+        FROM per_key
+    )
+    SELECT * FROM exact CROSS JOIN wide
+"""
+
+
+# ---------------------------------------------------------------------------
+# sliding-window HLL: trailing-24h distinct users per hour
+# ---------------------------------------------------------------------------
+def agg_hll_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-24-hour distinct-user estimate at every hour — the
+    sketch property agg_hll_set_ops shows across GROUPS, exercised
+    across TIME: hourly HLL registers merge into any trailing window by
+    register-wise max (a RANGE frame over the hour value), so the
+    dashboard never rescans raw events. Exact trailing distinct rides
+    along via the bounded ×24 (user, hour) expansion (the ev_dau_wau_mau
+    idiom) as ground truth.
+
+    The register grid is DENSIFIED (hours × 64 buckets) before the
+    frame so a bucket inactive in hour h still carries its trailing max
+    into h's estimate; grid size is hours × 64 — a metadata-scale frame
+    at any corpus size (a year is 560k rows). All register arithmetic
+    is the exact-integer HLL of agg_hll_handrolled."""
+    e = load(spark, sf_dir, "events").selectExpr(
+        "unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000 AS hour",
+        "user_id",
+    )
+    regs = (
+        e.selectExpr(
+            "hour",
+            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15),"
+            " 16, 10) AS BIGINT) AS h",
+        )
+        .selectExpr("hour", "h % 64 AS bucket", "h div 64 AS rest")
+        .groupBy("hour", "bucket")
+        .agg(F.expr(
+            "max(least(bit_count((rest & -rest) - 1) + 1, 55))").alias("m"))
+    )
+    bounds = e.agg(
+        F.min("hour").alias("h0"), F.max("hour").alias("h1")
+    )
+    grid = bounds.selectExpr(
+        "explode(sequence(h0, h1)) AS hour"
+    ).selectExpr(
+        "hour", "explode(sequence(0, 63)) AS bucket"
+    )
+    from pyspark.sql import Window as W
+
+    dense = grid.join(regs, ["hour", "bucket"], "left")
+    w24 = (
+        W.partitionBy("bucket").orderBy("hour").rangeBetween(-23, 0)
+    )
+    est = (
+        dense.withColumn("m24", F.max("m").over(w24))
+        .groupBy("hour")
+        .agg(
+            F.expr("sum(CASE WHEN m24 IS NULL THEN"
+                   " shiftleft(CAST(1 AS BIGINT), 55)"
+                   " ELSE shiftleft(CAST(1 AS BIGINT), 55 - m24) END)"
+                   ).alias("hll_sum_scaled"),
+        )
+        .selectExpr(
+            "hour",
+            "round(0.709D * 4096 * pow(2.0D, 55) / hll_sum_scaled, 4)"
+            " AS hll_24h",
+        )
+    )
+    exact = (
+        e.distinct()
+        .selectExpr("user_id", "explode(sequence(hour, hour + 23)) AS ehour")
+        .distinct()
+        .groupBy(F.col("ehour").alias("hour"))
+        .agg(F.count(F.lit(1)).alias("n_exact_24h"))
+    )
+    return (
+        est.join(exact, "hour", "inner")
+        .join(bounds.selectExpr("h1"), F.col("hour") <= F.col("h1"))
+        .select("hour", "n_exact_24h", "hll_24h")
+        .orderBy("hour")
+    )
+
+
+QUERIES["agg_hll_sliding_distinct"] = agg_hll_sliding_distinct
+
+ORACLES["agg_hll_sliding_distinct"] = """
+    WITH e AS (
+        SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hour,
+               user_id
+        FROM events
+    ),
+    regs AS (
+        SELECT hour,
+               CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
+                    AS BIGINT) % 64 AS bucket,
+               max(least(bit_count(
+                   ((CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
+                     AS BIGINT) // 64)
+                    & -(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
+                        AS BIGINT) // 64)) - 1) + 1, 55)) AS m
+        FROM e GROUP BY 1, 2
+    ),
+    bounds AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM e),
+    hours AS (
+        SELECT unnest(generate_series(h0, h1)) AS hour FROM bounds
+    ),
+    grid AS (
+        SELECT h.hour, b.bucket
+        FROM hours h, (SELECT unnest(generate_series(0, 63)) AS bucket) b
+    ),
+    dense AS (
+        SELECT g.hour, g.bucket, r.m
+        FROM grid g LEFT JOIN regs r
+          ON g.hour = r.hour AND g.bucket = r.bucket
+    ),
+    rolled AS (
+        SELECT hour, bucket,
+               max(m) OVER (PARTITION BY bucket ORDER BY hour
+                            RANGE BETWEEN 23 PRECEDING AND CURRENT ROW) AS m24
+        FROM dense
+    ),
+    est AS (
+        SELECT hour,
+               round(CAST(0.709 AS DOUBLE) * 4096 * pow(2.0, 55)
+                     / CAST(sum(CASE WHEN m24 IS NULL
+                                     THEN (CAST(1 AS BIGINT) << 55)
+                                     ELSE (CAST(1 AS BIGINT) << (55 - m24))
+                                END) AS BIGINT), 4) AS hll_24h
+        FROM rolled GROUP BY hour
+    ),
+    expanded AS (
+        SELECT DISTINCT user_id, hour + x.i AS ehour
+        FROM (SELECT DISTINCT user_id, hour FROM e) u,
+             (SELECT unnest(generate_series(0, 23)) AS i) x
+    ),
+    exact AS (
+        SELECT ehour AS hour, count(*) AS n_exact_24h
+        FROM expanded GROUP BY ehour
+    )
+    SELECT s.hour, x.n_exact_24h, s.hll_24h
+    FROM est s
+    JOIN exact x ON s.hour = x.hour
+    JOIN bounds b ON s.hour <= b.h1
+    ORDER BY s.hour
+"""
+
+
+# ---------------------------------------------------------------------------
+# KMV (k-minimum-values) distinct sketch — the theta-sketch family
+# ---------------------------------------------------------------------------
+_KMV_K = 64
+
+
+def agg_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV distinct-count sketch (Beyer et al., "On Synopses for
+    Distinct-Value Estimation Under Multiset Operations", SIGMOD'07 —
+    the estimator inside Apache DataSketches' theta sketch): hash every
+    user to a 32-bit value, keep the k=64 smallest per event_type, and
+    estimate distinct users as (k-1)·2^32 / h_(k); a sketch with fewer
+    than k values is exact by construction. A final 'ALL' row merges the
+    per-type sketches (union of min-sets, re-take min-k) — the
+    mergeability that makes KMV a one-pass, fixed-memory distinct
+    count at 100 TB where count(DISTINCT) needs a full shuffle of every
+    key. The exact count runs beside it ONLY as the eval harness
+    (sim_ann_recall_eval precedent): the sketch is the production path.
+
+    Determinism: md5 → first 8 hex chars → [0, 2^32) integers; the k-th
+    smallest via row_number over (hash, user_id) — total order, no ties
+    ambiguity; the estimate is one integer multiply-then-divide.
+    Scale shape: one groupBy(event_type, hash-distinct) aggregation;
+    the min-k step is a per-type top-k (window over ≤ |types| × k rows
+    after the per-partition partial)."""
+    e = load(spark, sf_dir, "events").select(
+        "event_type",
+        "user_id",
+        (
+            F.conv(
+                F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
+                16,
+                10,
+            ).cast("bigint")
+        ).alias("h"),
+    )
+    # distinct (type, h) — the sketch state; 'ALL' merges every type
+    per_type = e.select("event_type", "h").distinct()
+    merged = e.select(F.lit("ALL").alias("event_type"), "h").distinct()
+    sk = per_type.unionAll(merged)
+    rn = sk.withColumn(
+        "rn", F.row_number().over(W.partitionBy("event_type").orderBy("h"))
+    )
+    est = rn.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_hashes"),
+        F.max(F.when(F.col("rn") == _KMV_K, F.col("h"))).alias("hk"),
+    ).selectExpr(
+        "event_type",
+        f"CASE WHEN n_hashes < {_KMV_K} THEN n_hashes"
+        f" ELSE ({_KMV_K} - 1) * 4294967296L div hk END AS kmv_est",
+    )
+    ex_t = (
+        load(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("exact_distinct"))
+    )
+    ex_all = (
+        load(spark, sf_dir, "events")
+        .agg(F.countDistinct("user_id").alias("exact_distinct"))
+        .select(F.lit("ALL").alias("event_type"), "exact_distinct")
+    )
+    exact = ex_t.unionAll(ex_all)
+    return (
+        est.join(exact, "event_type")
+        .selectExpr(
+            "event_type",
+            "kmv_est",
+            "exact_distinct",
+            "round(abs(kmv_est - exact_distinct) * 100.0D"
+            " / exact_distinct, 4) AS rel_err_pct4",
+        )
+        .orderBy("event_type")
+    )
+
+
+QUERIES["agg_kmv_distinct_sketch"] = agg_kmv_distinct_sketch
+
+ORACLES["agg_kmv_distinct_sketch"] = f"""
+    WITH h AS (
+        SELECT event_type, user_id,
+               CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
+                    AS BIGINT) AS h
+        FROM events
+    ),
+    sk AS (
+        SELECT DISTINCT event_type, h FROM h
+        UNION ALL
+        SELECT DISTINCT 'ALL' AS event_type, h FROM h
+    ),
+    rn AS (
+        SELECT event_type, h,
+               row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+        FROM sk
+    ),
+    est AS (
+        SELECT event_type,
+               count(*) AS n_hashes,
+               max(CASE WHEN rn = {_KMV_K} THEN h END) AS hk
+        FROM rn GROUP BY event_type
+    ),
+    ex AS (
+        SELECT event_type, count(DISTINCT user_id) AS exact_distinct
+        FROM events GROUP BY event_type
+        UNION ALL
+        SELECT 'ALL', count(DISTINCT user_id) FROM events
+    )
+    SELECT est.event_type,
+           CAST(CASE WHEN n_hashes < {_KMV_K} THEN n_hashes
+                ELSE ({_KMV_K} - 1) * 4294967296 // hk END AS BIGINT)
+               AS kmv_est,
+           CAST(exact_distinct AS BIGINT) AS exact_distinct,
+           round(abs(CAST(CASE WHEN n_hashes < {_KMV_K} THEN n_hashes
+                     ELSE ({_KMV_K} - 1) * 4294967296 // hk END AS BIGINT)
+                     - exact_distinct) * 100.0
+                 / exact_distinct, 4) AS rel_err_pct4
+    FROM est JOIN ex ON est.event_type = ex.event_type
+    ORDER BY est.event_type
+"""
+
+
+# ---------------------------------------------------------------------------
+# Mergeable histogram quantile sketch vs exact quantiles
+# ---------------------------------------------------------------------------
+def agg_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-width-histogram quantile estimation over order totals: 100
+    fixed bins between the global min/max, quantile estimated as the
+    lower bound of the first bin whose cumulative count reaches
+    ceil(q·n) — the fixed-memory, one-pass, MERGEABLE quantile scheme
+    (each partition's bin counts just add), i.e. the shape a 100 TB
+    engine actually ships for p50/p90/p99 dashboards where an exact
+    quantile needs a global sort. The exact rank value is computed
+    beside it as the eval harness (group-by-value + cumulative window;
+    fine at fixture scale, and the docstringed trade-off is the point).
+
+    Determinism: prices quantized to integer cents (floor(x·100+0.5));
+    bin ids, ranks, targets ceil(q·n) = (n·q_bp + 9999) div 10000, and
+    both quantile values are pure int64 arithmetic — no doubles anywhere
+    in the output."""
+    o = load(spark, sf_dir, "orders").select(
+        F.expr(
+            "CAST(floor(o_totalprice * 100.0D + 0.5D) AS BIGINT)"
+        ).alias("cents")
+    )
+    glob = o.agg(
+        F.min("cents").alias("minc"),
+        F.max("cents").alias("maxc"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    binned = (
+        o.crossJoin(F.broadcast(glob))
+        .selectExpr(
+            "minc", "maxc", "n",
+            "least(99L, (cents - minc) * 100 div (maxc - minc + 1)) AS bin",
+        )
+        .groupBy("bin", "minc", "maxc", "n")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("cum", F.sum("cnt").over(W.orderBy("bin")))
+    )
+    targets = spark.range(1).selectExpr(
+        "explode(array(5000L, 9000L, 9900L)) AS q_bp"
+    )
+    est = (
+        binned.crossJoin(F.broadcast(targets))
+        .withColumn(
+            "target_rank", F.expr("(n * q_bp + 9999) div 10000")
+        )
+        .filter(F.col("cum") >= F.col("target_rank"))
+        .groupBy("q_bp")
+        .agg(
+            F.max("n").alias("n_rows"),
+            F.max("target_rank").alias("target_rank"),
+            F.min(
+                F.expr("minc + bin * (maxc - minc + 1) div 100")
+            ).alias("est_cents"),
+        )
+    )
+    exact_cum = (
+        o.groupBy("cents")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("cum", F.sum("cnt").over(W.orderBy("cents")))
+    )
+    exact = (
+        exact_cum.crossJoin(F.broadcast(est.select("q_bp", "target_rank")))
+        .filter(F.col("cum") >= F.col("target_rank"))
+        .groupBy("q_bp")
+        .agg(F.min("cents").alias("exact_cents"))
+    )
+    return (
+        est.join(exact, "q_bp")
+        .selectExpr(
+            "q_bp", "n_rows", "target_rank", "est_cents", "exact_cents",
+            "abs(est_cents - exact_cents) AS err_cents",
+        )
+        .orderBy("q_bp")
+    )
+
+
+QUERIES["agg_histogram_quantiles"] = agg_histogram_quantiles
+
+ORACLES["agg_histogram_quantiles"] = """
+    WITH o AS (
+        SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
+        FROM orders
+    ),
+    g0 AS (
+        SELECT min(cents) AS minc, max(cents) AS maxc,
+               count(*) AS n
+        FROM o
+    ),
+    binned AS (
+        SELECT least(99, (cents - minc) * 100 // (maxc - minc + 1)) AS bin,
+               minc, maxc, n, count(*) AS cnt
+        FROM o CROSS JOIN g0
+        GROUP BY 1, 2, 3, 4
+    ),
+    cumb AS (
+        SELECT *, sum(cnt) OVER (ORDER BY bin
+                                 ROWS UNBOUNDED PRECEDING) AS cum
+        FROM binned
+    ),
+    targets AS (
+        SELECT unnest([5000, 9000, 9900]) AS q_bp
+    ),
+    est AS (
+        SELECT q_bp,
+               max(n) AS n_rows,
+               max((n * q_bp + 9999) // 10000) AS target_rank,
+               min(minc + bin * (maxc - minc + 1) // 100) AS est_cents
+        FROM cumb CROSS JOIN targets
+        WHERE cum >= (n * q_bp + 9999) // 10000
+        GROUP BY q_bp
+    ),
+    exact_cum AS (
+        SELECT cents, sum(cnt) OVER (ORDER BY cents
+                                     ROWS UNBOUNDED PRECEDING) AS cum
+        FROM (SELECT cents, count(*) AS cnt FROM o GROUP BY cents)
+    ),
+    exact AS (
+        SELECT q_bp, min(cents) AS exact_cents
+        FROM exact_cum CROSS JOIN est
+        WHERE cum >= target_rank
+        GROUP BY q_bp
+    )
+    SELECT CAST(est.q_bp AS BIGINT) AS q_bp,
+           CAST(n_rows AS BIGINT) AS n_rows,
+           CAST(target_rank AS BIGINT) AS target_rank,
+           CAST(est_cents AS BIGINT) AS est_cents,
+           CAST(exact_cents AS BIGINT) AS exact_cents,
+           CAST(abs(est_cents - exact_cents) AS BIGINT) AS err_cents
+    FROM est JOIN exact ON est.q_bp = exact.q_bp
+    ORDER BY q_bp
+"""
+
+
+# ---------------------------------------------------------------------------
+# Price elasticity via quantized OLS
+# ---------------------------------------------------------------------------
+def agg_ols_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Log-log price elasticity per part brand: OLS slope of ln(qty) on
+    ln(unit price) — the retail econometrics staple (elasticity < -1 =
+    elastic demand). Inputs are QUANTIZED to int64 before summing, so
+    the five OLS sums are exact integers in either engine (a double Σln
+    would be accumulation-order-dependent) — the same trick as
+    ev_bot_detection's scaled-integer variance. Quantization is ln·100
+    with x CENTERED at 7.00 (xi −= 700): centering leaves the slope
+    invariant but shrinks |xi| to ≲460, keeping n·Σxx ≈ 1.2e18 < 2^63
+    even at the ×100 sweep's 2.4M rows/brand — the uncentered ln·1000
+    form crosses 2^63 there and ANSI mode would abort the query.
+
+    Scale shape: one projection + one groupBy(brand) — embarrassingly
+    partial-aggregable."""
+    li = load(spark, sf_dir, "lineitem")
+    part = load(spark, sf_dir, "part")
+    q = li.join(
+        F.broadcast(part.select("p_partkey", "p_brand")),
+        li["l_partkey"] == part["p_partkey"],
+    ).selectExpr(
+        "p_brand",
+        "CAST(floor(ln(l_extendedprice / l_quantity) * 100.0D) AS BIGINT)"
+        " - 700 AS xi",
+        "CAST(floor(ln(CAST(l_quantity AS DOUBLE)) * 100.0D)"
+        " AS BIGINT) AS yi",
+    )
+    return (
+        q.groupBy("p_brand")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("xi").alias("sx"),
+            F.sum("yi").alias("sy"),
+            F.sum(F.expr("xi * yi")).alias("sxy"),
+            F.sum(F.expr("xi * xi")).alias("sxx"),
+        )
+        .selectExpr(
+            "p_brand",
+            "n",
+            "round(CAST(n * sxy - sx * sy AS DOUBLE)"
+            " / CAST(n * sxx - sx * sx AS DOUBLE), 4) AS elasticity4",
+        )
+        .orderBy("p_brand")
+    )
+
+
+QUERIES["agg_ols_elasticity"] = agg_ols_elasticity
+
+ORACLES["agg_ols_elasticity"] = """
+    WITH q AS (
+        SELECT p_brand,
+               CAST(floor(ln(l_extendedprice / l_quantity) * 100.0)
+                    AS BIGINT) - 700 AS xi,
+               CAST(floor(ln(CAST(l_quantity AS DOUBLE)) * 100.0)
+                    AS BIGINT) AS yi
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+    ),
+    sums AS (
+        SELECT p_brand, count(*) AS n,
+               CAST(sum(xi) AS BIGINT) AS sx,
+               CAST(sum(yi) AS BIGINT) AS sy,
+               CAST(sum(xi * yi) AS BIGINT) AS sxy,
+               CAST(sum(xi * xi) AS BIGINT) AS sxx
+        FROM q GROUP BY 1
+    )
+    SELECT p_brand, n,
+           round(CAST(n * sxy - sx * sy AS DOUBLE)
+                 / CAST(n * sxx - sx * sx AS DOUBLE), 4) AS elasticity4
+    FROM sums
+    ORDER BY p_brand
+"""
+
+
+# ---------------------------------------------------------------------------
+# Laspeyres price index
+# ---------------------------------------------------------------------------
+def agg_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Laspeyres price index per order year: Σ p_t·q₀ / Σ p₀·q₀ over
+    parts traded in BOTH the base year (the data's first year) and year
+    t, with p = cents unit price (part-year revenue / quantity) and
+    q₀ = base-year quantity. Both sums are exact integer (cents ×
+    whole units) per year; the index is one double expression in basis
+    points. Plan: lineitem⋈orders on orderkey (the fact join), part-year
+    prices grouped once, then a partkey equi-join against the base-year
+    slice — every join keyed, no broadcast of unbounded sides."""
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_extendedprice", "l_quantity"
+    )
+    o = load(spark, sf_dir, "orders").selectExpr(
+        "o_orderkey", "year(o_orderdate) AS yr"
+    )
+    py = (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_partkey", "yr")
+        .agg(
+            F.expr(
+                "CAST(round(100.0D * SUM(l_extendedprice) / SUM(l_quantity))"
+                " AS BIGINT)"
+            ).alias("price_c"),
+            F.expr("CAST(SUM(l_quantity) AS BIGINT)").alias("qty"),
+        )
+    )
+    base_yr = py.agg(F.min("yr").alias("byr"))
+    base = (
+        py.join(F.broadcast(base_yr), F.expr("yr = byr"))
+        .selectExpr("l_partkey", "price_c AS p0", "qty AS q0")
+    )
+    return (
+        py.join(base, "l_partkey")
+        .groupBy("yr")
+        .agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.sum(F.expr("price_c * q0")).alias("num"),
+            F.sum(F.expr("p0 * q0")).alias("den"),
+        )
+        .selectExpr(
+            "yr", "n_parts",
+            "CAST(round(CAST(num AS DOUBLE) * 10000.0D"
+            " / CAST(den AS DOUBLE)) AS BIGINT) AS index_bp",
+        )
+        .orderBy("yr")
+    )
+
+
+QUERIES["agg_price_index_laspeyres"] = agg_price_index_laspeyres
+
+ORACLES["agg_price_index_laspeyres"] = """
+    WITH py AS (
+        SELECT l_partkey, year(o_orderdate) AS yr,
+               CAST(round(100.0 * SUM(l_extendedprice) / SUM(l_quantity))
+                    AS BIGINT) AS price_c,
+               CAST(SUM(l_quantity) AS BIGINT) AS qty
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY l_partkey, year(o_orderdate)
+    ),
+    base AS (
+        SELECT l_partkey, price_c AS p0, qty AS q0
+        FROM py WHERE yr = (SELECT MIN(yr) FROM py)
+    )
+    SELECT CAST(py.yr AS INT) AS yr, COUNT(*) AS n_parts,
+           CAST(round(CAST(SUM(py.price_c * base.q0) AS DOUBLE) * 10000.0
+                / CAST(SUM(base.p0 * base.q0) AS DOUBLE)) AS BIGINT)
+               AS index_bp
+    FROM py JOIN base USING (l_partkey)
+    GROUP BY py.yr
+    ORDER BY py.yr
+"""
+
+
+# ---------------------------------------------------------------------------
+# rollup share-of-parent
+# ---------------------------------------------------------------------------
+def agg_rollup_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The classic drill-down report: revenue by region/nation with each
+    row's share OF ITS PARENT level — nations within their region,
+    regions within the grand total — in exact ppm from integer cents.
+    One fact aggregation at nation grain; parent totals are window sums
+    over the (bounded) dimension grain, so no second scan and no
+    self-join. Emits all three ROLLUP levels with a level tag."""
+    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey")
+    r = load(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    nat = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("r_name", "n_name")
+        .agg(F.expr("CAST(SUM(round(o_totalprice * 100)) AS BIGINT)")
+             .alias("rev_c"))
+    )
+    wreg = W.partitionBy("r_name").rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing)
+    wall = W.partitionBy().rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing)
+    base = nat.select(
+        "r_name", "n_name", "rev_c",
+        F.sum("rev_c").over(wreg).alias("reg_c"),
+        F.sum("rev_c").over(wall).alias("tot_c"),
+    )
+    nation_rows = base.selectExpr(
+        "'nation' AS level", "r_name", "n_name", "rev_c",
+        "rev_c * 1000000 DIV reg_c AS share_of_parent_ppm",
+    )
+    region_rows = (
+        base.groupBy("r_name")
+        .agg(F.max("reg_c").alias("rev_c"), F.max("tot_c").alias("tot_c"))
+        .selectExpr(
+            "'region' AS level", "r_name", "CAST(NULL AS STRING) AS n_name",
+            "rev_c", "rev_c * 1000000 DIV tot_c AS share_of_parent_ppm",
+        )
+    )
+    total_row = (
+        base.groupBy()
+        .agg(F.max("tot_c").alias("rev_c"))
+        .selectExpr(
+            "'total' AS level", "CAST(NULL AS STRING) AS r_name",
+            "CAST(NULL AS STRING) AS n_name", "rev_c",
+            "CAST(1000000 AS BIGINT) AS share_of_parent_ppm",
+        )
+    )
+    return (
+        nation_rows.unionAll(region_rows).unionAll(total_row)
+        .orderBy("level", "r_name", "n_name")
+    )
+
+
+QUERIES["agg_rollup_share_of_parent"] = agg_rollup_share_of_parent
+
+ORACLES["agg_rollup_share_of_parent"] = """
+    WITH nat AS (
+        SELECT r.r_name, n.n_name,
+               CAST(SUM(round(o.o_totalprice * 100)) AS BIGINT) AS rev_c
+        FROM orders o
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        JOIN region r ON n.n_regionkey = r.r_regionkey
+        GROUP BY r.r_name, n.n_name
+    ),
+    base AS (
+        SELECT r_name, n_name, rev_c,
+               SUM(rev_c) OVER (PARTITION BY r_name) AS reg_c,
+               SUM(rev_c) OVER () AS tot_c
+        FROM nat
+    )
+    SELECT 'nation' AS level, r_name, n_name, rev_c,
+           CAST(rev_c * 1000000 // reg_c AS BIGINT) AS share_of_parent_ppm
+    FROM base
+    UNION ALL
+    SELECT 'region', r_name, CAST(NULL AS VARCHAR),
+           CAST(MAX(reg_c) AS BIGINT),
+           CAST(MAX(reg_c) * 1000000 // MAX(tot_c) AS BIGINT)
+    FROM base GROUP BY r_name
+    UNION ALL
+    SELECT 'total', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
+           CAST(MAX(tot_c) AS BIGINT), CAST(1000000 AS BIGINT)
+    FROM base
+    ORDER BY level, r_name, n_name
+"""
+
+
+# ---------------------------------------------------------------------------
+# Herfindahl-Hirschman concentration index
+# ---------------------------------------------------------------------------
+def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HHI per region: the sum of squared nation revenue shares — the
+    antitrust-standard concentration scalar (10000 = monopoly, <1500 =
+    competitive). Shares quantize to basis points FIRST (integer cents
+    revenue, bp = rev·10000 // regional total), so the squared-share
+    sum is exact in both engines; the two-level groupBy is the
+    canonical partial-aggregated rollup."""
+    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey")
+    r = load(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    nat = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("r_name", "n_name")
+        .agg(F.expr("CAST(SUM(round(o_totalprice * 100)) AS BIGINT)")
+             .alias("rev_c"))
+    )
+    wreg = W.partitionBy("r_name").rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing)
+    return (
+        nat.withColumn("tot_c", F.sum("rev_c").over(wreg))
+        .selectExpr("r_name", "rev_c * 10000 DIV tot_c AS share_bp")
+        .groupBy("r_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_nations"),
+            F.sum(F.expr("share_bp * share_bp DIV 10000")).alias("hhi"),
+            F.max("share_bp").alias("top_share_bp"),
+        )
+        .orderBy("r_name")
+    )
+
+
+QUERIES["agg_hhi_concentration"] = agg_hhi_concentration
+
+ORACLES["agg_hhi_concentration"] = """
+    WITH nat AS (
+        SELECT r.r_name, n.n_name,
+               CAST(SUM(round(o.o_totalprice * 100)) AS BIGINT) AS rev_c
+        FROM orders o
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        JOIN region r ON n.n_regionkey = r.r_regionkey
+        GROUP BY r.r_name, n.n_name
+    ),
+    shares AS (
+        SELECT r_name,
+               rev_c * 10000 // (SUM(rev_c) OVER (PARTITION BY r_name))
+                   AS share_bp
+        FROM nat
+    )
+    SELECT r_name, COUNT(*) AS n_nations,
+           CAST(SUM(share_bp * share_bp // 10000) AS BIGINT) AS hhi,
+           CAST(MAX(share_bp) AS BIGINT) AS top_share_bp
+    FROM shares
+    GROUP BY r_name
+    ORDER BY r_name
 """

@@ -325,3 +325,49 @@ ORACLES["coll_map_aggregation"] = """
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
 """
+
+
+# --------------------------------------------------------------------------
+# higher-order array lambdas: filter / exists / forall / aggregate / zip_with
+# --------------------------------------------------------------------------
+def coll_lambda_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lambda family over token arrays. Every expression is row-local
+    whole-stage codegen (no UDF, no shuffle); zip_with pairs each token
+    with its 1-based position for a position-weighted length sum."""
+    d = load(spark, sf_dir, "documents")
+    return (
+        d.withColumn("toks", F.expr("split(text, ' ')"))
+        .select(
+            "doc_id",
+            F.expr("size(filter(toks, t -> length(t) > 4))").alias("n_long"),
+            F.expr("exists(toks, t -> length(t) >= 8)").alias("has_verylong"),
+            F.expr("forall(toks, t -> length(t) <= 10)").alias("all_short"),
+            F.expr("aggregate(toks, 0, (acc, t) -> acc + length(t))").alias(
+                "total_len"
+            ),
+            F.expr(
+                "aggregate(zip_with(toks, sequence(1, size(toks)),"
+                " (t, i) -> i * length(t)), 0L, (acc, x) -> acc + x)"
+            ).alias("pos_weighted_len"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+QUERIES["coll_lambda_ops"] = coll_lambda_ops
+
+ORACLES["coll_lambda_ops"] = """
+        SELECT doc_id,
+               CAST(len(list_filter(toks, t -> length(t) > 4)) AS INTEGER)
+                   AS n_long,
+               len(list_filter(toks, t -> length(t) >= 8)) > 0
+                   AS has_verylong,
+               len(list_filter(toks, t -> length(t) > 10)) = 0
+                   AS all_short,
+               CAST(list_sum(list_transform(toks, t -> length(t)))
+                    AS INTEGER) AS total_len,
+               CAST(list_sum(list_transform(toks, (t, i) -> i * length(t)))
+                    AS BIGINT) AS pos_weighted_len
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+        ORDER BY doc_id
+    """

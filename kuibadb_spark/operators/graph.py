@@ -29,160 +29,14 @@ from kuibadb_spark.operators.dedup import (
     _SHINGLES_DUCK,
     _doc_shingles,
     _dup_corpus,
+    _edges,
     _pair_stats,
 )
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _pair_stats(_doc_shingles(_dup_corpus(spark, sf_dir)))
-    return (
-        pairs.filter(
-            F.col("inter")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")) >= 0.6
-        )
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
+QUERIES: dict = {}
 
-
-def _connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Internal form: `members` is a real array (consumed by
-    dedup_cluster_verdicts' explode). The registry-facing
-    dedup_connected_components stringifies it at the boundary."""
-    # undirected: propagate both ways. Symmetrize ROW-LOCALLY (explode of
-    # the two directions) instead of unionAll(edges, edges.swapped): the
-    # union form needed `edges` itself persisted so its two branches
-    # wouldn't re-run the whole candidate pipeline, leaving BOTH the edge
-    # table and its doubled sym twin pinned in executor storage (3× edge
-    # rows) for the life of the loop — the explode emits both directions
-    # inside the row, so one pipeline pass materializes `sym` directly
-    # and only it is cached (2× edge rows, one persist fewer; guide-§5
-    # cache hygiene, round-10).
-    sym = (
-        _edges(spark, sf_dir)
-        .select(
-            F.explode(
-                F.expr(
-                    "array(struct(src, dst),"
-                    " struct(dst AS src, src AS dst))"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .persist()
-    )
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("label", F.col("node")).persist()
-    pinned = labels  # the currently-persisted frame (unpersist target)
-
-    for i in range(20):  # bound ≥ graph diameter; dup chains are shallow
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # carry old + new label in ONE frame so the convergence check is
-        # a filter over the materialized frame, not a third node-keyed
-        # join per round (one join + one shuffle fewer per iteration;
-        # measured ~25% off the fixpoint at sf0.1)
-        stepped = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
-            "node",
-            F.col("label").alias("old_label"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-            ).alias("label"),
-        )
-        # cache hygiene at 100 TB node scale: materialize the new label
-        # table, DROP the superseded one (executor memory stays at ~one
-        # label-table, not one per round), and truncate the join lineage
-        # every 5 rounds so the plan doesn't grow 20 joins deep.
-        # localCheckpoint cuts lineage without an HDFS checkpoint dir.
-        if (i + 1) % 5 == 0:
-            stepped = stepped.localCheckpoint(eager=True)
-        else:
-            stepped = stepped.persist()
-        changed = stepped.filter(
-            F.col("label") != F.col("old_label")
-        ).count()
-        pinned.unpersist()
-        pinned = stepped
-        labels = stepped.select("node", "label")
-        if changed == 0:
-            break
-
-    # The converged label table was already materialized by the loop's
-    # convergence counts — checkpoint it so (a) every downstream
-    # consumer (this rollup, cluster verdicts, representatives) starts
-    # from the materialized RDD instead of re-deriving the edge
-    # pipeline + all rounds on re-execution (the DESIGN #30 class: the
-    # persists above are orphaned by any clearCache between actions),
-    # and (b) the loop-pinned frames can be RELEASED — edges/sym/last
-    # stepped previously stayed persisted for the session's lifetime,
-    # an executor-memory leak of one edge table + one label table per
-    # CC invocation.
-    labels = labels.localCheckpoint(eager=True)
-    pinned.unpersist()
-    sym.unpersist()
-
-    return (
-        labels.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.expr("array_sort(collect_list(node))").alias("members"),
-        )
-        .select(F.col("label").alias("cluster_id"), "cluster_size", "members")
-        .orderBy("cluster_id")
-    )
-
-
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # CSV members at the boundary — driver comparator can't hash array cells
-    return _connected_components(spark, sf_dir).selectExpr(
-        "cluster_id", "cluster_size", "array_join(members, ',') AS members"
-    )
-
-
-QUERIES = {"dedup_connected_components": dedup_connected_components}
-
-ORACLES = {
-    "dedup_connected_components": f"""
-        WITH RECURSIVE {_DUP_CORPUS_DUCK},
-        {_SHINGLES_DUCK},
-        sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS i
-            FROM shingles a JOIN shingles b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        ),
-        edges AS (
-            SELECT src, dst FROM inter
-            JOIN sizes sa ON sa.doc_id = src
-            JOIN sizes sb ON sb.doc_id = dst
-            WHERE i / (sa.sz + sb.sz - i) >= 0.6
-        ),
-        sym AS (
-            SELECT src, dst FROM edges
-            UNION ALL SELECT dst, src FROM edges
-        ),
-        reach(node, label) AS (
-            SELECT DISTINCT src, src FROM sym
-            UNION
-            SELECT s.src, r.label
-            FROM sym s JOIN reach r ON s.dst = r.node
-        ),
-        final AS (
-            SELECT node, min(label) AS label FROM reach GROUP BY node
-        )
-        SELECT label AS cluster_id,
-               count(*) AS cluster_size,
-               array_to_string(list_sort(list(node)), ',') AS members
-        FROM final
-        GROUP BY label
-        ORDER BY cluster_id
-    """,
-}
+ORACLES: dict = {}
 
 
 # ---------------------------------------------------------------------------
@@ -239,7 +93,7 @@ def _coactivity_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     strongest neighbors (shared-hours desc, dst asc), symmetrized, and
     left partitioned on src for downstream joins. ONE definition for
     every consumer (graph_link_prediction here; label propagation /
-    BFS reach / Adamic-Adar via curation7._knn_graph) so cap or
+    BFS reach / Adamic-Adar via _knn_graph) so cap or
     threshold changes cannot drift between copies (round-6 review
     finding) — any change here must update the matching oracle CTEs
     (_AH_CAPPED_DUCK consumers) in lockstep.
@@ -500,129 +354,6 @@ ORACLES["graph_triangle_count"] = f"""
 
 
 # ---------------------------------------------------------------------------
-# per-document dedup verdicts: the cluster pass's final output
-# ---------------------------------------------------------------------------
-def dedup_cluster_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end product a curation pipeline actually consumes: one row
-    per duplicate-involved document with its cluster id, cluster size,
-    and the keep/drop verdict (canonical = min doc_id in the component
-    — exactly what the min-label propagation converges to, so the
-    cluster id IS the canonical id). Composes the connected-components
-    fixpoint with a row-local member explode; documents outside any
-    near-dup component are implicitly kept and never shuffled."""
-    cc = _connected_components(spark, sf_dir)
-    return (
-        cc.select(
-            "cluster_id",
-            "cluster_size",
-            F.explode("members").alias("doc_id"),
-        )
-        .withColumn("kept", F.col("doc_id") == F.col("cluster_id"))
-        .select("doc_id", "cluster_id", "cluster_size", "kept")
-        .orderBy("doc_id")
-    )
-
-
-def dedup_cluster_representatives(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Quality-based representative selection — the curation policy a
-    real pipeline wants instead of keep-min-id: per near-dup cluster,
-    keep the member with the best content score (distinct-token count
-    as the primary signal, text length as the integer tiebreak, doc_id
-    as the final deterministic tiebreak). Complements
-    dedup_cluster_verdicts (positional keep-min-id policy) with the
-    keep-best-quality policy; reference has no analog (SURVEY §2.3
-    LLM-pipeline extras).
-
-    Scale: the score is row-local over the corpus, members are only the
-    duplicate-involved docs, and the arg-max is a per-cluster window —
-    one equi-join + one bounded window partition per cluster."""
-    cc = _connected_components(spark, sf_dir)
-    members = cc.select(
-        "cluster_id", "cluster_size", F.explode("members").alias("doc_id")
-    )
-    scores = _dup_corpus(spark, sf_dir).selectExpr(
-        "doc_id",
-        r"CAST(size(array_distinct(split(text, '\\s+'))) AS BIGINT)"
-        " * 1000000 + length(text) AS score",
-    )
-    w = W.partitionBy("cluster_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        members.join(scores, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster_id",
-            "cluster_size",
-            F.col("doc_id").alias("rep_doc_id"),
-            F.col("score").alias("rep_score"),
-        )
-        .orderBy("cluster_id")
-    )
-
-
-QUERIES["dedup_cluster_verdicts"] = dedup_cluster_verdicts
-QUERIES["dedup_cluster_representatives"] = dedup_cluster_representatives
-
-ORACLES["dedup_cluster_verdicts"] = ORACLES[
-    "dedup_connected_components"
-].replace(
-    """SELECT label AS cluster_id,
-               count(*) AS cluster_size,
-               array_to_string(list_sort(list(node)), ',') AS members
-        FROM final
-        GROUP BY label
-        ORDER BY cluster_id""",
-    """SELECT node AS doc_id,
-               label AS cluster_id,
-               count(*) OVER (PARTITION BY label) AS cluster_size,
-               node = label AS kept
-        FROM final
-        ORDER BY doc_id""",
-)
-# the verdicts oracle is derived by textual rewrite of the components
-# oracle — guard against a silent no-op if the source text drifts
-assert ORACLES["dedup_cluster_verdicts"] != ORACLES["dedup_connected_components"]
-
-ORACLES["dedup_cluster_representatives"] = ORACLES[
-    "dedup_connected_components"
-].replace(
-    """SELECT label AS cluster_id,
-               count(*) AS cluster_size,
-               array_to_string(list_sort(list(node)), ',') AS members
-        FROM final
-        GROUP BY label
-        ORDER BY cluster_id""",
-    """SELECT cluster_id, cluster_size, rep_doc_id, rep_score FROM (
-            SELECT f.label AS cluster_id,
-                   count(*) OVER (PARTITION BY f.label) AS cluster_size,
-                   f.node AS rep_doc_id,
-                   s.score AS rep_score,
-                   row_number() OVER (
-                       PARTITION BY f.label
-                       ORDER BY s.score DESC, f.node ASC
-                   ) AS rn
-            FROM final f
-            JOIN (
-                SELECT doc_id,
-                       CAST(len(list_distinct(
-                           string_split_regex(text, '\\s+'))) AS BIGINT)
-                       * 1000000 + length(text) AS score
-                FROM corpus
-            ) s ON s.doc_id = f.node
-        ) WHERE rn = 1
-        ORDER BY cluster_id""",
-)
-assert (
-    ORACLES["dedup_cluster_representatives"]
-    != ORACLES["dedup_connected_components"]
-)
-
-
-# ---------------------------------------------------------------------------
 # link prediction: common-neighbor Jaccard over the near-dup graph
 # ---------------------------------------------------------------------------
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,3 +458,794 @@ ORACLES["graph_link_prediction"] = f"""
     ORDER BY jaccard_e6 DESC, a, b
     LIMIT 50
 """
+
+
+# ---------------------------------------------------------------------------
+# degree distribution of the near-dup graph
+# ---------------------------------------------------------------------------
+def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree histogram of the undirected near-dup graph (same edge set
+    as graph_pagerank / connected components): how many docs have k
+    near-duplicates. The shape-of-the-graph sanity check run before any
+    iterative graph job — a heavy right tail means a boilerplate hub
+    that will dominate label propagation. Linear: degree = one
+    groupBy(node) over the symmetrized edges, histogram = one tiny
+    groupBy(degree); the expensive shingle pipeline is computed once."""
+    edges = _edges(spark, sf_dir)
+    sym = (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("src"), F.col("dst")),
+                    F.struct(
+                        F.col("dst").alias("src"), F.col("src").alias("dst")
+                    ),
+                )
+            ).alias("e")
+        )
+        .select("e.src")
+    )
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+    return (
+        deg.groupBy("degree")
+        .agg(F.count(F.lit(1)).alias("n_nodes"))
+        .orderBy("degree")
+    )
+
+
+QUERIES["graph_degree_distribution"] = graph_degree_distribution
+
+ORACLES["graph_degree_distribution"] = f"""
+    WITH {_DUP_CORPUS_DUCK},
+    {_SHINGLES_DUCK},
+    sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS i
+        FROM shingles a JOIN shingles b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    ),
+    edges AS (
+        SELECT src, dst FROM inter
+        JOIN sizes sa ON sa.doc_id = src
+        JOIN sizes sb ON sb.doc_id = dst
+        WHERE i / (sa.sz + sb.sz - i) >= 0.6
+    ),
+    sym AS (
+        SELECT src FROM edges UNION ALL SELECT dst FROM edges
+    ),
+    deg AS (
+        SELECT src, count(*) AS degree FROM sym GROUP BY src
+    )
+    SELECT degree, count(*) AS n_nodes
+    FROM deg
+    GROUP BY degree
+    ORDER BY degree
+"""
+
+
+# ---------------------------------------------------------------------------
+# k-core decomposition of the near-duplicate graph
+# ---------------------------------------------------------------------------
+_KC_TAU = 0.4   # looser than the 0.6 dedup edge: denser structure
+_KC_K = 3
+_KC_ROUNDS = 6  # fixture converges in <= 3; extra rounds are no-ops
+
+
+def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-core decomposition (Seidman 1983) of the near-dup similarity
+    graph at Jaccard >= 0.4: repeatedly delete nodes of degree < k=3
+    until fixpoint — the surviving 3-core is the "dense boilerplate
+    cluster" signal (a hub template family), stronger than connected
+    components which a single chance edge can chain together. The
+    DuckDB oracle runs a fixed _KC_ROUNDS=6 unroll; the Spark loop
+    caps at the same _KC_ROUNDS but EARLY-EXITS at the detected
+    fixpoint (see the inline comment below) — converged rounds are
+    identity maps, so the two are provably identical (the pagerank
+    fixed-rounds precedent, graph.py:141).
+
+    Scale shape: each round is degree-count groupBy + two semi-joins on
+    the shrinking edge set — the standard BSP peeling. Each round ends
+    in localCheckpoint(eager), NOT persist(): persist caches data but
+    keeps the logical plan, and every peel round embeds the prior
+    round's plan three times (sym + keep(sym) twice), so analysis cost
+    grows 3^r — measured 2 s/round for rounds 0-2 then 95 s and 161 s
+    for rounds 4-5 at sf0.001 before the checkpoint truncation (the CC
+    precedent, graph.py:51; the Spark-side twin of the DuckDB
+    MATERIALIZED fix in this operator's oracle). Edges reuse
+    _pair_stats' inverted-postings candidate builder (capped hot
+    shingles, dedup.py:150) — never an all-pairs join."""
+    pairs = _pair_stats(_doc_shingles(_dup_corpus(spark, sf_dir)))
+    edges = pairs.filter(
+        F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+        >= _KC_TAU
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    sym = edges.unionAll(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint()
+    # Early-exit at the peel fixpoint (round-10 optimization): if a round
+    # deletes no edge, degrees are unchanged, so every later round is an
+    # identity map — the fixed-count unroll just re-materializes the same
+    # edge set, and the exit is provably result-identical to running all
+    # _KC_ROUNDS. The check is deferred until the round where the graph
+    # class converges (<= 3 peels on every fixture sweep): an
+    # every-round count was measured NET-NEGATIVE at bench scale (each
+    # count over the checkpointed frame is a ~0.3 s job; warm builder
+    # 6.2 s with 6 blind rounds vs 8.6 s with 7 counts), so rounds 0-2
+    # run unchecked and only the tail — where a skipped round is a full
+    # groupBy + two joins over the surviving edges for provably zero
+    # change — pays a count (warm builder 5.3 s: 4 rounds + 2 counts).
+    _KC_CHECK_FROM = 2  # 0-based round index after which counts start
+    n_edges = None
+    for i in range(_KC_ROUNDS):
+        keep = (
+            sym.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") >= _KC_K)
+            .select("src")
+        )
+        sym = (
+            sym.join(keep, "src")
+            .join(keep.withColumnRenamed("src", "dst"), "dst")
+            .select("src", "dst")
+            .localCheckpoint()
+        )
+        if i >= _KC_CHECK_FROM:
+            n_prev, n_edges = n_edges, sym.count()
+            if n_edges == n_prev:
+                break
+    out = (
+        sym.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("degree"))
+        .selectExpr("src AS node", "degree")
+        .orderBy("node")
+    )
+    return out
+
+
+QUERIES["graph_kcore"] = graph_kcore
+
+
+def _kcore_oracle() -> str:
+    parts = [f"""WITH {_DUP_CORPUS_DUCK},
+    {_SHINGLES_DUCK},
+    sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS i
+        FROM shingles a JOIN shingles b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    ),
+    edges AS (
+        SELECT src, dst FROM inter
+        JOIN sizes sa ON sa.doc_id = src
+        JOIN sizes sb ON sb.doc_id = dst
+        WHERE i / (sa.sz + sb.sz - i) >= {_KC_TAU}
+    ),
+    sym0 AS MATERIALIZED (
+        SELECT src, dst FROM edges
+        UNION ALL SELECT dst, src FROM edges
+    )"""]
+    # Every sym{r} is AS MATERIALIZED: without it DuckDB inlines each
+    # CTE at every reference site, and sym{r} references sym{r-1} three
+    # times (directly + twice via keep{r}) — 3^6 = 729 inlined copies of
+    # the base shingle self-join, measured as minutes-at-sf0.001 of
+    # single-core grind. Materialization makes each round O(edges), the
+    # same cost model as the Spark side's per-round persist.
+    for r in range(1, _KC_ROUNDS + 1):
+        parts.append(f""",
+    keep{r} AS MATERIALIZED (
+        SELECT src FROM sym{r - 1} GROUP BY src
+        HAVING count(*) >= {_KC_K}
+    ),
+    sym{r} AS MATERIALIZED (
+        SELECT s.src, s.dst FROM sym{r - 1} s
+        JOIN keep{r} a ON s.src = a.src
+        JOIN keep{r} b ON s.dst = b.src
+    )""")
+    parts.append(f"""
+    SELECT src AS node, count(*) AS degree
+    FROM sym{_KC_ROUNDS}
+    GROUP BY src
+    ORDER BY node""")
+    return "".join(parts)
+
+
+ORACLES["graph_kcore"] = _kcore_oracle()
+
+
+# ---------------------------------------------------------------------------
+# shared: kNN-sparsified hour-co-activity graph (graph.py:497 shape)
+# ---------------------------------------------------------------------------
+def _knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed kNN adjacency (src, dst) — delegates to the single
+    shared builder (graph._coactivity_knn: hour-capped co-activity,
+    shared >= 5, top-10 neighbors per node; round-6 review dedup of the
+    formerly copy-pasted pipeline)."""
+    return _coactivity_knn(spark, sf_dir)
+
+
+_KNN_GRAPH_DUCK = f"""
+    {_AH_CAPPED_DUCK},
+    raw_e AS (
+        SELECT p.user_id AS src, q.user_id AS dst, COUNT(*) AS shared
+        FROM ah p JOIN ah q ON p.h = q.h AND p.user_id < q.user_id
+        GROUP BY p.user_id, q.user_id
+        HAVING COUNT(*) >= 5
+    ),
+    sym_full AS (
+        SELECT src, dst, shared FROM raw_e
+        UNION ALL
+        SELECT dst, src, shared FROM raw_e
+    ),
+    sym AS (
+        SELECT src, dst FROM (
+            SELECT *, row_number() OVER (PARTITION BY src
+                       ORDER BY shared DESC, dst ASC) AS rn
+            FROM sym_full
+        ) WHERE rn <= 10
+    )
+"""
+
+
+# ---------------------------------------------------------------------------
+# label-propagation community detection (3 synchronous rounds)
+# ---------------------------------------------------------------------------
+_LPA_ROUNDS = 3
+
+
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Synchronous label propagation (Raghavan 2007) on the sparsified
+    co-activity graph: every node starts with its own id and adopts, per
+    round, the most frequent label among its kNN neighbors (count desc,
+    label asc tie-break — fully deterministic, unlike the randomized
+    original). Fixed 3 rounds in BOTH engines (the pagerank fixed-rounds
+    precedent); each round is one groupBy + one argmax window over the
+    DEGREE-BOUNDED edge list, so a round costs O(E)=O(10·V) at any
+    scale. Output: communities of >= 2 members with sizes.
+
+    Lineage discipline (the graph_kcore precedent): the
+    co-activity graph is persisted (else every round re-derives the
+    hour self-join — first sweep measured ×16.1 at ×10) and each
+    round's labels are localCheckpoint'd so round r+1's plan does not
+    embed round r's twice."""
+    sym = _knn_graph(spark, sf_dir).persist()
+    labels = (
+        sym.select(F.col("src").alias("node")).distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(_LPA_ROUNDS):
+        votes = (
+            sym.join(labels, sym.dst == labels.node)
+            .groupBy("src", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        wpick = W.partitionBy("src").orderBy(F.desc("c"), F.asc("label"))
+        labels = (
+            votes.withColumn("rn", F.row_number().over(wpick))
+            .filter("rn = 1")
+            .select(F.col("src").alias("node"), "label")
+            .localCheckpoint(eager=True)
+        )
+    sym.unpersist()
+    return (
+        labels.groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n_members"),
+             F.min("node").alias("min_node"))
+        .filter("n_members >= 2")
+        .selectExpr("label AS community", "n_members", "min_node")
+        .orderBy(F.desc("n_members"), F.asc("community"))
+    )
+
+
+QUERIES["graph_label_propagation"] = graph_label_propagation
+
+_LPA_ROUND_DUCK = """
+    votes{r} AS MATERIALIZED (
+        SELECT s.src, l.label, COUNT(*) AS c
+        FROM sym s JOIN l{p} l ON s.dst = l.node
+        GROUP BY s.src, l.label
+    ),
+    l{r} AS MATERIALIZED (
+        SELECT src AS node, label FROM (
+            SELECT *, row_number() OVER (PARTITION BY src
+                       ORDER BY c DESC, label ASC) AS rn
+            FROM votes{r}
+        ) WHERE rn = 1
+    )
+"""
+
+ORACLES["graph_label_propagation"] = f"""
+    WITH {_KNN_GRAPH_DUCK},
+    l0 AS MATERIALIZED (
+        SELECT DISTINCT src AS node, src AS label FROM sym
+    ),
+    {",".join(_LPA_ROUND_DUCK.format(r=i + 1, p=i)
+              for i in range(_LPA_ROUNDS))}
+    SELECT label AS community, COUNT(*) AS n_members, MIN(node) AS min_node
+    FROM l{_LPA_ROUNDS}
+    GROUP BY label
+    HAVING COUNT(*) >= 2
+    ORDER BY n_members DESC, community ASC
+"""
+
+
+# ---------------------------------------------------------------------------
+# multi-source BFS reach (3 hops, unrolled)
+# ---------------------------------------------------------------------------
+_BFS_HOPS = 3
+
+
+def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Breadth-first reach from the 3 highest-degree hubs: how much of
+    the graph is within k hops of each hub — the influence/propagation
+    primitive. 3 unrolled frontier-expansion rounds; every round is a
+    frontier⋈adjacency equi-join + distinct, bounded by degree^hops
+    (10³ here) per hub. The hub set is deterministic (degree desc,
+    node asc)."""
+    sym = _knn_graph(spark, sf_dir).persist()
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    wtop = W.orderBy(F.desc("d"), F.asc("src"))
+    hubs = (
+        deg.withColumn("rn", F.row_number().over(wtop))
+        .filter("rn <= 3")
+        .select(F.col("src").alias("hub"))
+    )
+    # each round's reach set is localCheckpoint'd: round r+1 references
+    # round r TWICE (count + expansion), so without truncation the plan
+    # doubles per hop and re-derives the co-activity build — the first
+    # sweep measured 29.6 s at sf0.1 for what is 3 tiny joins
+    reached = (
+        F.broadcast(hubs).join(sym, hubs.hub == sym.src)
+        .select("hub", F.col("dst").alias("node")).distinct()
+        .localCheckpoint(eager=True)
+    )
+    out = [reached.groupBy("hub").agg(F.count(F.lit(1)).alias("n_reached"))
+           .selectExpr("hub", "CAST(1 AS INT) AS hop", "n_reached")]
+    for hop in range(2, _BFS_HOPS + 1):
+        frontier = (
+            reached.join(sym, reached.node == sym.src)
+            .select("hub", F.col("dst").alias("node"))
+        )
+        reached = (
+            reached.unionAll(frontier).distinct()
+            .localCheckpoint(eager=True)
+        )
+        out.append(
+            reached.groupBy("hub").agg(F.count(F.lit(1)).alias("n_reached"))
+            .selectExpr("hub", f"CAST({hop} AS INT) AS hop", "n_reached")
+        )
+    sym.unpersist()
+    res = out[0]
+    for o in out[1:]:
+        res = res.unionAll(o)
+    return res.orderBy("hub", "hop")
+
+
+QUERIES["graph_bfs_reach"] = graph_bfs_reach
+
+ORACLES["graph_bfs_reach"] = f"""
+    WITH {_KNN_GRAPH_DUCK},
+    hubs AS MATERIALIZED (
+        SELECT src AS hub FROM (
+            SELECT src, row_number() OVER (
+                ORDER BY COUNT(*) DESC, src ASC) AS rn
+            FROM sym GROUP BY src
+        ) WHERE rn <= 3
+    ),
+    r1 AS MATERIALIZED (
+        SELECT DISTINCT h.hub, s.dst AS node
+        FROM hubs h JOIN sym s ON s.src = h.hub
+    ),
+    r2 AS MATERIALIZED (
+        SELECT DISTINCT hub, node FROM (
+            SELECT hub, node FROM r1
+            UNION ALL
+            SELECT r.hub, s.dst AS node FROM r1 r JOIN sym s ON s.src = r.node
+        )
+    ),
+    r3 AS MATERIALIZED (
+        SELECT DISTINCT hub, node FROM (
+            SELECT hub, node FROM r2
+            UNION ALL
+            SELECT r.hub, s.dst AS node FROM r2 r JOIN sym s ON s.src = r.node
+        )
+    )
+    SELECT hub, hop, n_reached FROM (
+        SELECT hub, CAST(1 AS INT) AS hop, COUNT(*) AS n_reached
+        FROM r1 GROUP BY hub
+        UNION ALL
+        SELECT hub, CAST(2 AS INT), COUNT(*) FROM r2 GROUP BY hub
+        UNION ALL
+        SELECT hub, CAST(3 AS INT), COUNT(*) FROM r3 GROUP BY hub
+    )
+    ORDER BY hub, hop
+"""
+
+
+# ---------------------------------------------------------------------------
+# Adamic-Adar link scoring
+# ---------------------------------------------------------------------------
+def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Adamic-Adar link prediction on the sparsified graph — the
+    degree-penalized cousin of graph_link_prediction's Jaccard: a
+    common neighbor n contributes 1/ln(deg(n)), so hub-mediated
+    connections count less. Per-neighbor contributions are quantized
+    to round(1e6/ln(max(deg,2))) BEFORE summing (ln is libm-identical
+    on identical integer inputs; the max(,2) clamp is the standard
+    guard for degree-1 leaves). Two-hop candidates over the bounded
+    adjacency, existing edges anti-joined away, top 20 by score."""
+    sym = _knn_graph(spark, sf_dir).persist()
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    contrib = deg.selectExpr(
+        "src AS n",
+        "CAST(round(1000000.0D / ln(CAST(greatest(d, 2) AS DOUBLE))) AS BIGINT)"
+        " AS w",
+    )
+    hops = (
+        sym.alias("x")
+        .join(sym.alias("y"), F.col("x.dst") == F.col("y.dst"))
+        .filter(F.col("x.src") < F.col("y.src"))
+        .select(
+            F.col("x.src").alias("a"),
+            F.col("y.src").alias("b"),
+            F.col("x.dst").alias("n"),
+        )
+    )
+    scored = (
+        hops.join(F.broadcast(contrib), "n")
+        .groupBy("a", "b")
+        .agg(F.sum("w").alias("aa_micro"),
+             F.count(F.lit(1)).alias("n_common"))
+    )
+    non_edges = scored.join(
+        sym.selectExpr("src AS a", "dst AS b"), ["a", "b"], "anti"
+    )
+    # top-20 via orderBy().limit() — TakeOrderedAndProject, a distributed
+    # per-partition top-k + driver merge of 20 rows. A partition-less
+    # row_number window here single-task-sorts EVERY candidate pair
+    # (first sweep: ×32.8 at ×10); the rank column is then a window over
+    # 20 rows only.
+    top = non_edges.orderBy(
+        F.desc("aa_micro"), F.asc("a"), F.asc("b")
+    ).limit(20)
+    wtop = W.orderBy(F.desc("aa_micro"), F.asc("a"), F.asc("b"))
+    return (
+        top.withColumn("rn", F.row_number().over(wtop))
+        .selectExpr("CAST(rn AS INT) AS rank", "a", "b", "n_common",
+                    "aa_micro")
+        .orderBy("rank")
+    )
+
+
+QUERIES["graph_adamic_adar"] = graph_adamic_adar
+
+ORACLES["graph_adamic_adar"] = f"""
+    WITH {_KNN_GRAPH_DUCK},
+    contrib AS (
+        SELECT src AS n,
+               CAST(round(1000000.0 / ln(CAST(greatest(COUNT(*), 2)
+                    AS DOUBLE))) AS BIGINT) AS w
+        FROM sym GROUP BY src
+    ),
+    hops AS (
+        SELECT x.src AS a, y.src AS b, x.dst AS n
+        FROM sym x JOIN sym y ON x.dst = y.dst AND x.src < y.src
+    ),
+    scored AS (
+        SELECT h.a, h.b,
+               CAST(SUM(c.w) AS BIGINT) AS aa_micro,
+               COUNT(*) AS n_common
+        FROM hops h JOIN contrib c USING (n)
+        GROUP BY h.a, h.b
+    ),
+    non_edges AS (
+        SELECT s.* FROM scored s
+        WHERE NOT EXISTS (SELECT 1 FROM sym e
+                          WHERE e.src = s.a AND e.dst = s.b)
+    )
+    SELECT CAST(rn AS INT) AS rank, a, b, n_common, aa_micro FROM (
+        SELECT *, row_number() OVER (
+            ORDER BY aa_micro DESC, a ASC, b ASC) AS rn
+        FROM non_edges
+    ) WHERE rn <= 20
+    ORDER BY rank
+"""
+
+
+# ---------------------------------------------------------------------------
+# degree assortativity of the co-activity kNN graph
+# ---------------------------------------------------------------------------
+def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree assortativity of the shared kNN co-activity graph: the
+    Pearson correlation between out-degrees at the two ends of every
+    directed edge. Positive = hubs prefer hubs (social cores), negative
+    = hub-and-spoke (bot fan-in) — the one-number structural read next
+    to graph_degree_distribution.
+
+    Exact-moment Pearson (the profile_corr_matrix house pattern): all
+    five moments are exact integer sums (degree ≤ 10 by kNN cap, so
+    n·Σxy ≤ 100·n_edges² — int64-safe to ~3e8 edges; shard the edge
+    list beyond that); the only doubles are the final two
+    exactly-representable variance terms, one IEEE-correctly-rounded
+    multiply + sqrt, and the ppm round (≥/≤0 symmetric, half away from
+    zero in both engines).
+
+    Scale shape: the shared capped kNN builder (one bounded hour
+    self-join), a degree groupBy, two broadcast-able joins of (node,
+    deg ≤ 10) onto edges, one 1-row aggregate. No windows beyond the
+    builder's own partitioned ones. The builder feeds THREE consumers
+    (the degree aggregate + both edge-end joins); it is materialized
+    ONCE via an eager localCheckpoint (round-8 ADVICE: the static plan
+    embeds the builder subtree per consumer with no ReusedExchange
+    node, so without materialization the hour self-join could run three
+    times per action; the checkpointed edge list is degree-bounded,
+    ≤ 10·V rows of two bigints, and localCheckpoint survives
+    clearCache, the _knn_graph house pattern).
+    """
+    sym = _knn_graph(spark, sf_dir).localCheckpoint(eager=True)
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    e = (
+        sym.join(deg.withColumnRenamed("src", "s2"),
+                 F.col("src") == F.col("s2"))
+        .withColumnRenamed("deg", "dx")
+        .drop("s2")
+        .join(
+            deg.select(
+                F.col("src").alias("d2"), F.col("deg").alias("dy")
+            ),
+            F.col("dst") == F.col("d2"),
+        )
+        .drop("d2")
+    )
+    m = e.agg(
+        F.count(F.lit(1)).alias("n_edges"),
+        F.sum("dx").alias("sx"),
+        F.sum("dy").alias("sy"),
+        F.sum(F.expr("dx * dx")).alias("sxx"),
+        F.sum(F.expr("dy * dy")).alias("syy"),
+        F.sum(F.expr("dx * dy")).alias("sxy"),
+    )
+    return m.selectExpr(
+        "n_edges",
+        "sx * 1000 DIV n_edges AS mean_src_deg_milli",
+        "sy * 1000 DIV n_edges AS mean_dst_deg_milli",
+        """CASE WHEN (n_edges * sxx - sx * sx) = 0
+                  OR (n_edges * syy - sy * sy) = 0 THEN CAST(0 AS BIGINT)
+           ELSE CAST(round(1000000 * CAST(n_edges * sxy - sx * sy AS DOUBLE)
+                / sqrt(CAST(n_edges * sxx - sx * sx AS DOUBLE)
+                       * CAST(n_edges * syy - sy * sy AS DOUBLE)))
+                AS BIGINT) END AS assortativity_ppm""",
+    )
+
+
+QUERIES["graph_degree_assortativity"] = graph_degree_assortativity
+
+
+def _assort_oracle() -> str:
+    return f"""
+    WITH {_KNN_GRAPH_DUCK},
+    deg AS (
+        SELECT src, COUNT(*) AS deg FROM sym GROUP BY src
+    ),
+    e AS (
+        SELECT a.deg AS dx, b.deg AS dy
+        FROM sym JOIN deg a ON sym.src = a.src
+                 JOIN deg b ON sym.dst = b.src
+    ),
+    m AS (
+        SELECT COUNT(*) AS n_edges,
+               CAST(SUM(dx) AS BIGINT) AS sx,
+               CAST(SUM(dy) AS BIGINT) AS sy,
+               CAST(SUM(dx * dx) AS BIGINT) AS sxx,
+               CAST(SUM(dy * dy) AS BIGINT) AS syy,
+               CAST(SUM(dx * dy) AS BIGINT) AS sxy
+        FROM e
+    )
+    SELECT n_edges,
+           CAST(sx * 1000 // n_edges AS BIGINT) AS mean_src_deg_milli,
+           CAST(sy * 1000 // n_edges AS BIGINT) AS mean_dst_deg_milli,
+           CASE WHEN (n_edges * sxx - sx * sx) = 0
+                  OR (n_edges * syy - sy * sy) = 0 THEN CAST(0 AS BIGINT)
+           ELSE CAST(round(1000000 * CAST(n_edges * sxy - sx * sy AS DOUBLE)
+                / sqrt(CAST(n_edges * sxx - sx * sx AS DOUBLE)
+                       * CAST(n_edges * syy - sy * sy AS DOUBLE)))
+                AS BIGINT) END AS assortativity_ppm
+    FROM m
+"""
+
+
+ORACLES["graph_degree_assortativity"] = _assort_oracle()
+
+
+# ---------------------------------------------------------------------------
+# kNN graph reciprocity
+# ---------------------------------------------------------------------------
+def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocity of the kNN co-activity graph: the share of directed
+    edges whose reverse edge also survived the top-10 truncation.
+    High reciprocity = mutual cores (communities); low = asymmetric
+    hub attachment (celebrities, bots). One number + the edge counts
+    behind it.
+
+    Scale shape: the shared capped kNN builder, then ONE self
+    equi-join on the reversed key pair and a 1-row aggregate; no
+    windows beyond the builder's own partitioned ones. The builder
+    feeds both join sides, so it is materialized ONCE via an eager
+    localCheckpoint (round-8 ADVICE; see graph_degree_assortativity's
+    note — degree-bounded edge list, clearCache-immune).
+    """
+    sym = _knn_graph(spark, sf_dir).localCheckpoint(eager=True)
+    rev = sym.selectExpr("dst AS src", "src AS dst", "1 AS has_rev")
+    return (
+        sym.join(rev, ["src", "dst"], "left")
+        .agg(
+            F.count(F.lit(1)).alias("n_edges"),
+            F.count("has_rev").alias("n_reciprocal"),
+        )
+        .selectExpr(
+            "n_edges",
+            "n_reciprocal",
+            "n_reciprocal * 1000000 DIV n_edges AS reciprocity_ppm",
+        )
+    )
+
+
+QUERIES["graph_reciprocity"] = graph_reciprocity
+
+
+def _recip_oracle() -> str:
+    return f"""
+    WITH {_KNN_GRAPH_DUCK}
+    SELECT COUNT(*) AS n_edges,
+           CAST(SUM(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_reciprocal,
+           CAST(SUM(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
+                * 1000000 // COUNT(*) AS BIGINT) AS reciprocity_ppm
+    FROM sym e
+    LEFT JOIN sym r ON r.src = e.dst AND r.dst = e.src
+"""
+
+
+ORACLES["graph_reciprocity"] = _recip_oracle()
+
+
+# ---------------------------------------------------------------------------
+# source-partition modularity of the near-dup graph
+# ---------------------------------------------------------------------------
+def graph_source_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Newman modularity contribution of each SOURCE under the near-dup
+    graph: q_c = L_c/m − (D_c/2m)², in ppm — the one-table answer to
+    "are near-duplicates mostly within-source (re-crawls: dedup per
+    source suffices) or cross-source (syndication: global dedup is
+    mandatory)?". Positive contributions = assortative sources.
+
+    Node → source is ROW-LOCAL: the dup-corpus copy offsets (+1 M,
+    +2 M — dedup._dup_corpus) are multiples of 20, and the fixture
+    pins source = 'src' || (doc_id % 20), so node % 20 recovers every
+    node's source with no join against documents.
+
+    Scale shape: the _pair_stats-derived edge list (the family's one
+    heavy pipeline, round-10 packed form), then only metadata-scale
+    aggregates. Round-11 replan: the original spelling hung FOUR
+    consumers (m, per-source degree mass, per-source node counts,
+    per-source intra counts) off the edge list — exchange reuse pays
+    the pipeline's map side once, but the pair-aggregate REDUCE tail
+    (113 M pair groups at ×100) re-ran per consumer, measured +7.4 s
+    of the query's 18.9 s at ×10 (edges alone: 11.6 s). m, dmass and
+    intra are all marginals of ONE ≤|sources|² row (src-sid, dst-sid)
+    census, so they now ride a single pass over the edge list and the
+    only other consumer is the node-distinct (genuinely node-scale).
+    Output is |sources| rows, identical by algebra: m = Σc,
+    deg_sum(s) = Σ_{sa=s} c + Σ_{sb=s} c, intra(s) = Σ_{sa=sb=s} c.
+
+    Integer exactness: both terms are single floor divisions per
+    source, mirrored in the oracle. int64 headroom: 10⁶·D_c² needs
+    D_c < 3.03·10⁶ — a source carrying >1.5 M intra-degree mass wants
+    the milli spelling or per-shard modularity; stated, not silent."""
+    edges = _edges(spark, sf_dir)
+    census = (
+        edges.selectExpr("src % 20 AS sa", "dst % 20 AS sb")
+        .groupBy("sa", "sb")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    m = census.agg(F.sum("c").alias("m"))
+    # degree mass per source: explode both census directions row-locally
+    # (≤2·|sources|² rows), then one narrow groupBy — deg(node) is never
+    # materialized per node and the edge list is never re-walked
+    dmass = (
+        census.select(
+            F.explode(
+                F.expr("array(struct(sa AS sid, c), struct(sb AS sid, c))")
+            ).alias("p")
+        )
+        .groupBy("p.sid")
+        .agg(F.sum("p.c").alias("deg_sum"))
+    )
+    nodes = (
+        edges.selectExpr("explode(array(src, dst)) AS node")
+        .distinct()
+        .selectExpr("node % 20 AS sid")
+        .groupBy("sid")
+        .agg(F.count(F.lit(1)).alias("n_nodes"))
+    )
+    intra = (
+        census.filter("sa = sb")
+        .selectExpr("sa AS sid", "c")
+        .groupBy("sid")
+        .agg(F.sum("c").alias("intra_edges"))
+    )
+    return (
+        nodes.join(dmass, "sid", "left")
+        .join(intra, "sid", "left")
+        .crossJoin(F.broadcast(m))
+        .selectExpr(
+            "concat('src', sid) AS source",
+            "n_nodes",
+            "coalesce(deg_sum, 0) AS deg_sum",
+            "coalesce(intra_edges, 0) AS intra_edges",
+            "(1000000 * coalesce(intra_edges, 0)) div m"
+            " - (1000000 * coalesce(deg_sum, 0) * coalesce(deg_sum, 0))"
+            " div (4 * m * m) AS q_contrib_ppm",
+        )
+        .orderBy("source")
+    )
+
+
+QUERIES["graph_source_modularity"] = graph_source_modularity
+
+
+def _modularity_duck() -> str:
+    return f"""
+    WITH {_DUP_CORPUS_DUCK},
+    {_SHINGLES_DUCK},
+    sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS i
+        FROM shingles a JOIN shingles b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    ),
+    edges AS (
+        SELECT src, dst FROM inter
+        JOIN sizes sa ON sa.doc_id = src
+        JOIN sizes sb ON sb.doc_id = dst
+        WHERE i / (sa.sz + sb.sz - i) >= 0.6
+    ),
+    m AS (SELECT count(*) AS m FROM edges),
+    dmass AS (
+        SELECT sid, count(*) AS deg_sum FROM (
+            SELECT src % 20 AS sid FROM edges
+            UNION ALL SELECT dst % 20 FROM edges
+        ) GROUP BY sid
+    ),
+    nodes AS (
+        SELECT sid, count(*) AS n_nodes FROM (
+            SELECT DISTINCT node % 20 AS sid, node FROM (
+                SELECT src AS node FROM edges
+                UNION ALL SELECT dst FROM edges
+            )
+        ) GROUP BY sid
+    ),
+    intra AS (
+        SELECT src % 20 AS sid, count(*) AS intra_edges
+        FROM edges WHERE src % 20 = dst % 20 GROUP BY src % 20
+    )
+    SELECT 'src' || CAST(n.sid AS VARCHAR) AS source,
+           n.n_nodes,
+           CAST(coalesce(d.deg_sum, 0) AS BIGINT) AS deg_sum,
+           CAST(coalesce(i.intra_edges, 0) AS BIGINT) AS intra_edges,
+           CAST((1000000 * coalesce(i.intra_edges, 0)) // m.m
+                - (1000000 * coalesce(d.deg_sum, 0)
+                   * coalesce(d.deg_sum, 0)) // (4 * m.m * m.m)
+               AS BIGINT) AS q_contrib_ppm
+    FROM nodes n
+    LEFT JOIN dmass d ON d.sid = n.sid
+    LEFT JOIN intra i ON i.sid = n.sid
+    CROSS JOIN m
+    ORDER BY source
+"""
+
+
+ORACLES["graph_source_modularity"] = _modularity_duck()

@@ -11,9 +11,11 @@ corpus size. The funnel is a single per-user aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from kuibadb_spark.catalog import load
+from kuibadb_spark.operators.dedup import _DUP_CORPUS_DUCK, _dup_corpus
+from kuibadb_spark.operators.text import _SHINGLE_ARR_SPARK
 
 
 # --------------------------------------------------------------------------
@@ -51,75 +53,6 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# top-k frequent tokens per language (exact, window top-k)
-# --------------------------------------------------------------------------
-def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    d = load(spark, sf_dir, "documents")
-    counts = (
-        d.select("lang", F.explode(F.split("text", r"\s+")).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = W.partitionBy("lang").orderBy(F.desc("n"), F.asc("tok"))
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("lang", "rank", "tok", "n")
-        .orderBy("lang", "rank")
-    )
-
-
-# --------------------------------------------------------------------------
-# funnel: signup → first purchase conversion per user cohort
-# --------------------------------------------------------------------------
-def ev_funnel_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("signup_ts"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "first_purchase_ts"
-        ),
-    )
-    converted = per_user.withColumn(
-        "converted",
-        F.col("signup_ts").isNotNull()
-        & F.col("first_purchase_ts").isNotNull()
-        & (F.col("first_purchase_ts") > F.col("signup_ts")),
-    )
-    return converted.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.when(F.col("signup_ts").isNotNull(), 1).otherwise(0)).alias(
-            "n_signed_up"
-        ),
-        F.sum(F.when(F.col("converted"), 1).otherwise(0)).alias("n_converted"),
-    )
-
-
-# --------------------------------------------------------------------------
-# retention cohorts: signup week × weeks-since-signup activity matrix
-# --------------------------------------------------------------------------
-def ev_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "events")
-    first_seen = e.groupBy("user_id").agg(
-        F.date_trunc("WEEK", F.min("ts")).alias("cohort_week")
-    )
-    activity = e.join(first_seen, "user_id").withColumn(
-        "week_offset",
-        F.expr(
-            "CAST(timestampdiff(DAY, cohort_week, date_trunc('WEEK', ts)) div 7"
-            " AS INT)"
-        ),
-    )
-    return (
-        activity.groupBy("cohort_week", "week_offset")
-        .agg(F.countDistinct("user_id").alias("active_users"))
-        .orderBy("cohort_week", "week_offset")
-    )
-
-
-# --------------------------------------------------------------------------
 # data profiling: per-column nulls / exact NDV / extrema in one pass shape
 # --------------------------------------------------------------------------
 def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,10 +78,7 @@ def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "profile_lineitem": profile_lineitem,
-    "ev_retention_cohorts": ev_retention_cohorts,
     "pipeline_curation": pipeline_curation,
-    "text_top_tokens": text_top_tokens,
-    "ev_funnel_signup_purchase": ev_funnel_signup_purchase,
 }
 
 ORACLES = {
@@ -181,24 +111,6 @@ ORACLES = {
         FROM lineitem
         ORDER BY col_name
     """,
-    "ev_retention_cohorts": """
-        WITH first_seen AS (
-            SELECT user_id,
-                   CAST(date_trunc('week', min(ts)) AS TIMESTAMP) AS cohort_week
-            FROM events GROUP BY user_id
-        ), activity AS (
-            SELECT e.user_id, f.cohort_week,
-                   CAST(date_diff('day', f.cohort_week,
-                        CAST(date_trunc('week', e.ts) AS TIMESTAMP)) // 7
-                        AS INTEGER) AS week_offset
-            FROM events e JOIN first_seen f ON e.user_id = f.user_id
-        )
-        SELECT cohort_week, week_offset,
-               count(DISTINCT user_id) AS active_users
-        FROM activity
-        GROUP BY cohort_week, week_offset
-        ORDER BY cohort_week, week_offset
-    """,
     "pipeline_curation": """
         WITH toks AS (
             SELECT doc_id, lang, text,
@@ -224,38 +136,6 @@ ORACLES = {
         FROM deduped
         GROUP BY lang
         ORDER BY lang
-    """,
-    "text_top_tokens": """
-        WITH counts AS (
-            SELECT lang, unnest(string_split_regex(text, '\\s+')) AS tok
-            FROM documents
-        ), agg AS (
-            SELECT lang, tok, count(*) AS n FROM counts GROUP BY lang, tok
-        )
-        SELECT lang, rank, tok, n FROM (
-            SELECT lang, tok, n,
-                   CAST(row_number() OVER (PARTITION BY lang
-                        ORDER BY n DESC, tok ASC) AS INTEGER) AS rank
-            FROM agg)
-        WHERE rank <= 5
-        ORDER BY lang, rank
-    """,
-    "ev_funnel_signup_purchase": """
-        WITH per_user AS (
-            SELECT user_id,
-                   min(CASE WHEN event_type = 'signup' THEN ts END) AS signup_ts,
-                   min(CASE WHEN event_type = 'purchase' THEN ts END)
-                       AS first_purchase_ts
-            FROM events GROUP BY user_id
-        )
-        SELECT count(*) AS n_users,
-               CAST(sum(CASE WHEN signup_ts IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_signed_up,
-               CAST(sum(CASE WHEN signup_ts IS NOT NULL
-                             AND first_purchase_ts IS NOT NULL
-                             AND first_purchase_ts > signup_ts
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-        FROM per_user
     """,
 }
 
@@ -328,228 +208,6 @@ ORACLES["profile_constraint_checks"] = """
                                   WHERE o.o_orderkey = l.l_orderkey))
     )
     ORDER BY rule
-"""
-
-
-# --------------------------------------------------------------------------
-# A/B experiment readout: hash-assigned variants, integer-exact lift
-# --------------------------------------------------------------------------
-def ev_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experimentation readout: users deterministically hash-assigned to
-    control/treatment (md5 bucket — the same stable assignment a real
-    platform uses so a user never flips arms), purchase behavior
-    compared per arm with integer-cents means at 1e-2 precision and the
-    treatment-minus-control lift emitted in exact integer units. One
-    row per arm plus a 'lift' row — everything partial-aggregable, no
-    floats in any cross-row path."""
-    e = load(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").selectExpr(
-        "user_id",
-        "CAST(round(value * 100) AS BIGINT) AS cents",
-    )
-    armed = p.withColumn(
-        "arm",
-        F.when(
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-            == 0,
-            "control",
-        ).otherwise("treatment"),
-    )
-    per_arm = armed.groupBy("arm").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_purchases"),
-        F.sum("cents").alias("total_cents"),
-    ).withColumn(
-        "mean_cents_per_purchase",
-        F.expr("total_cents div n_purchases"),
-    )
-    lift = (
-        per_arm.groupBy()
-        .pivot("arm", ["control", "treatment"])
-        .sum("total_cents")
-        .selectExpr(
-            "'lift' AS arm",
-            "CAST(NULL AS BIGINT) AS n_users",
-            "CAST(NULL AS BIGINT) AS n_purchases",
-            "treatment - control AS total_cents",
-            "CAST(NULL AS BIGINT) AS mean_cents_per_purchase",
-        )
-    )
-    return per_arm.unionAll(lift).orderBy("arm")
-
-
-QUERIES["ev_ab_test_lift"] = ev_ab_test_lift
-
-ORACLES["ev_ab_test_lift"] = """
-    WITH armed AS (
-        SELECT user_id,
-               CAST(round(value * 100) AS BIGINT) AS cents,
-               CASE WHEN CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-                                             1, 8) AS BIGINT) % 2 = 0
-                    THEN 'control' ELSE 'treatment' END AS arm
-        FROM events
-        WHERE event_type = 'purchase'
-    ),
-    per_arm AS (
-        SELECT arm,
-               count(DISTINCT user_id) AS n_users,
-               count(*) AS n_purchases,
-               CAST(sum(cents) AS BIGINT) AS total_cents,
-               CAST(sum(cents) // count(*) AS BIGINT)
-                   AS mean_cents_per_purchase
-        FROM armed
-        GROUP BY arm
-    )
-    SELECT arm, n_users, n_purchases, total_cents, mean_cents_per_purchase
-    FROM per_arm
-    UNION ALL
-    SELECT 'lift', NULL, NULL,
-           (SELECT total_cents FROM per_arm WHERE arm = 'treatment')
-             - (SELECT total_cents FROM per_arm WHERE arm = 'control'),
-           NULL
-    ORDER BY arm
-"""
-
-
-# --------------------------------------------------------------------------
-# ordered 4-step funnel: signup → view → click → purchase, in time order
-# --------------------------------------------------------------------------
-def ev_step_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The classic ordered funnel chart: users who did signup, then a
-    view within 24 h after the signup, then a click within 24 h of that
-    view, then a purchase within 24 h of that click — per-step user
-    counts and step-over-step conversion in exact integer ppm. The
-    24 h step deadline is what makes the funnel slope on this fixture
-    (150 → 39 → 16 → 5 users at sf0.01); without it every user
-    eventually completes every step.
-
-    Plan shape: four chained window passes over ONE user_id exchange
-    (each step's first-qualifying timestamp is a min-over-partition
-    that references the previous step's column — no self-joins, no
-    per-user arrays), then a global conditional aggregate whose output
-    is 4 rows. At 100 TB: one shuffle of (user, type, ts) triples,
-    window state is 4 timestamps per user."""
-    from pyspark.sql import Window as W
-
-    e = load(spark, sf_dir, "events").selectExpr(
-        "user_id", "event_type AS et", "unix_micros(CAST(ts AS TIMESTAMP)) AS us"
-    )
-    w = W.partitionBy("user_id")
-    staged = (
-        e.withColumn("t1", F.min(F.when(F.col("et") == "signup", F.col("us"))).over(w))
-        .withColumn(
-            "t2",
-            F.min(
-                F.when(
-                    (F.col("et") == "view")
-                    & (F.col("us") > F.col("t1"))
-                    & (F.col("us") - F.col("t1") <= 86400000000),
-                    F.col("us"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t3",
-            F.min(
-                F.when(
-                    (F.col("et") == "click")
-                    & (F.col("us") > F.col("t2"))
-                    & (F.col("us") - F.col("t2") <= 86400000000),
-                    F.col("us"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t4",
-            F.min(
-                F.when(
-                    (F.col("et") == "purchase")
-                    & (F.col("us") > F.col("t3"))
-                    & (F.col("us") - F.col("t3") <= 86400000000),
-                    F.col("us"),
-                )
-            ).over(w),
-        )
-        .select("user_id", "t1", "t2", "t3", "t4")
-        .distinct()
-    )
-    agg = staged.agg(
-        F.count(F.lit(1)).alias("n0"),
-        F.count("t1").alias("n1"),
-        F.count("t2").alias("n2"),
-        F.count("t3").alias("n3"),
-        F.count("t4").alias("n4"),
-    )
-    return (
-        agg.selectExpr(
-            "stack(4,"
-            " 1, 'signup', n1, CAST(1000000 * n1 div n0 AS BIGINT),"
-            " 2, 'view_after_signup', n2, CAST(1000000 * n2 div n1 AS BIGINT),"
-            " 3, 'click_after_view', n3, CAST(1000000 * n3 div n2 AS BIGINT),"
-            " 4, 'purchase_after_click', n4, CAST(1000000 * n4 div n3 AS BIGINT)"
-            ") AS (step, step_name, n_users, conv_ppm)"
-        )
-        .orderBy("step")
-    )
-
-
-QUERIES["ev_step_funnel"] = ev_step_funnel
-
-ORACLES["ev_step_funnel"] = """
-    WITH e AS (
-        SELECT user_id, event_type AS et, epoch_us(ts) AS us FROM events
-    ),
-    staged AS (
-        SELECT DISTINCT user_id, t1, t2, t3, t4 FROM (
-            SELECT user_id,
-                   t1, t2, t3,
-                   min(CASE WHEN et = 'purchase' AND us > t3 AND us - t3 <= 86400000000 THEN us END)
-                       OVER (PARTITION BY user_id) AS t4
-            FROM (
-                SELECT user_id, et, us, t1, t2,
-                       min(CASE WHEN et = 'click' AND us > t2 AND us - t2 <= 86400000000 THEN us END)
-                           OVER (PARTITION BY user_id) AS t3
-                FROM (
-                    SELECT user_id, et, us, t1,
-                           min(CASE WHEN et = 'view' AND us > t1 AND us - t1 <= 86400000000 THEN us END)
-                               OVER (PARTITION BY user_id) AS t2
-                    FROM (
-                        SELECT user_id, et, us,
-                               min(CASE WHEN et = 'signup' THEN us END)
-                                   OVER (PARTITION BY user_id) AS t1
-                        FROM e
-                    )
-                )
-            )
-        )
-    ),
-    agg AS (
-        SELECT CAST(count(*) AS BIGINT) AS n0,
-               CAST(count(t1) AS BIGINT) AS n1,
-               CAST(count(t2) AS BIGINT) AS n2,
-               CAST(count(t3) AS BIGINT) AS n3,
-               CAST(count(t4) AS BIGINT) AS n4
-        FROM staged
-    )
-    SELECT * FROM (
-        SELECT 1 AS step, 'signup' AS step_name, n1 AS n_users,
-               CAST(1000000 * n1 // n0 AS BIGINT) AS conv_ppm FROM agg
-        UNION ALL
-        SELECT 2, 'view_after_signup', n2, CAST(1000000 * n2 // n1 AS BIGINT)
-        FROM agg
-        UNION ALL
-        SELECT 3, 'click_after_view', n3, CAST(1000000 * n3 // n2 AS BIGINT)
-        FROM agg
-        UNION ALL
-        SELECT 4, 'purchase_after_click', n4, CAST(1000000 * n4 // n3 AS BIGINT)
-        FROM agg
-    )
-    ORDER BY step
 """
 
 
@@ -712,102 +370,685 @@ ORACLES["rfm_segmentation"] = """
 """
 
 
-# ---------------------------------------------------------------------------
-# linear multi-touch attribution: credit purchases across preceding touches
-# ---------------------------------------------------------------------------
-def ev_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch attribution — each purchase splits one unit of
-    credit equally (integer ppm) across ALL the user's view/click
-    touches in the trailing 7 days (inclusive of the purchase instant).
-    No join forms: purchases and touches ride ONE per-user exchange and
-    the per-type touch counts come from conditional counts over a
-    RANGE frame keyed on integer microseconds — the w_trailing window
-    discipline. Output is the per-channel credit rollup marketers
-    actually consume.
+# --------------------------------------------------------------------------
+# the capstone: end-to-end curation attrition funnel (one pass, 5 stages)
+# --------------------------------------------------------------------------
+def pipeline_attrition_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pipeline-attrition table every pretraining data team ships:
+    how many documents survive each curation stage, cumulatively —
+    exact dedup → cross-doc boilerplate filter → C4 quality rules →
+    benchmark decontamination → mixture sampling. Output: one row per
+    stage with survivor count and cumulative keep-ppm.
 
-    Scale shape: one shuffle on user_id; the range frame scans each
-    user's 7-day trailing span once (sorted within partition); the
-    final per-type rollup is a 2-row aggregate."""
-    from pyspark.sql import Window as W
+    Plan shape: every stage is computed as a PER-DOC BOOLEAN FLAG in one
+    annotated table (a window for canonical-exact-dup, one chunk-count
+    join for boilerplate, row-local C4 rules, one broadcast semi-probe
+    for decontamination, a row-local hash for sampling), and the funnel
+    is ONE conditional aggregate over cumulative flag conjunctions —
+    the whole 5-stage report costs ~two shuffles + one broadcast, not
+    five pipeline re-runs. That is exactly how the report stays cheap
+    at 100 TB: stages annotate, one reduce counts.
 
-    e = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "click", "purchase")
+    Input is the synthesized dup corpus (documents + exact/near copies,
+    dedup._dup_corpus) so the dedup stage does real work — raw fixture
+    documents contain no exact duplicates."""
+    d = _dup_corpus(spark, sf_dir)
+    # stage 1: exact dedup — keep the min doc_id per content digest
+    w_dig = F.expr(
+        "doc_id = min(doc_id) OVER (PARTITION BY md5(text))"
     )
-    tagged = e.selectExpr(
-        "user_id",
-        "event_id",
-        "event_type",
-        "unix_micros(CAST(ts AS TIMESTAMP)) AS us",
+    # stage 2: boilerplate — share of 10-token chunks repeated in ≥2 docs
+    chunks = d.selectExpr("doc_id", "split(text, ' ') AS w").selectExpr(
+        "doc_id",
+        "explode(transform(sequence(0, CAST(ceil(size(w)/10.0) AS INT) - 1),"
+        " i -> array_join(slice(w, i*10+1, 10), ' '))) AS chunk",
     )
-    seven_d = 7 * 24 * 3600 * 1_000_000
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("us")
-        .rangeBetween(-seven_d, 0)
+    ccount = chunks.groupBy("chunk").agg(
+        F.count_distinct("doc_id").alias("nd")
     )
-    counted = (
-        tagged.withColumn(
-            "n_view",
-            F.count(F.when(F.col("event_type") == "view", 1)).over(w),
+    boiler = (
+        chunks.join(ccount, "chunk")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.count_if(F.col("nd") >= 2).alias("n_boiler"),
+        )
+        .selectExpr("doc_id", "10 * n_boiler < 3 * n_chunks AS f_boiler")
+    )
+    # stage 4 input: benchmark 3-shingle set (doc_id%17==0 slice)
+    sh = (
+        d.withColumn("w", F.split("text", r"\s+"))
+        .select("doc_id", F.expr(_SHINGLE_ARR_SPARK).alias("shs"))
+        .select("doc_id", F.explode_outer("shs").alias("shingle"))
+        .filter(F.col("shingle").isNotNull())
+    )
+    bench = (
+        sh.filter(F.col("doc_id") % 17 == 0).select("shingle").distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    contam = (
+        sh.filter(F.col("doc_id") % 17 != 0)
+        .join(F.broadcast(bench), "shingle", "left")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("sz"), F.count("hit").alias("n_shared"))
+        .selectExpr(
+            "doc_id",
+            "NOT (n_shared >= 10 OR n_shared * 5 >= sz) AS f_clean",
+        )
+    )
+    flags = (
+        d.withColumn("f_exact", w_dig)
+        .selectExpr(
+            "doc_id", "f_exact",
+            # C4-style rules, row-local (text_c4_quality_filters' set)
+            "size(split(text, ' ')) AS n_words",
+            "aggregate(split(text, ' '), 0, (a, t) -> a + length(t)) AS sum_len",
+            # mixture sampling: keep 80% by hash, deterministic
+            "CAST(conv(substring(md5(concat('funnel', CAST(doc_id AS STRING))),"
+            " 1, 8), 16, 10) AS BIGINT) % 100 < 80 AS f_mix",
         )
         .withColumn(
-            "n_click",
-            F.count(F.when(F.col("event_type") == "click", 1)).over(w),
+            "f_c4",
+            F.expr("n_words >= 20 AND 3 * n_words <= sum_len"
+                   " AND sum_len <= 10 * n_words"),
         )
-        .filter(F.col("event_type") == "purchase")
-        .withColumn("n_touch", F.col("n_view") + F.col("n_click"))
-        .filter(F.col("n_touch") > 0)
+        .join(boiler, "doc_id", "left")
+        .join(contam, "doc_id", "left")
+        .selectExpr(
+            "doc_id",
+            "f_exact",
+            "coalesce(f_boiler, true) AS f_boiler",
+            "f_c4",
+            # benchmark docs themselves (not in contam) count as clean
+            "coalesce(f_clean, true) AS f_clean",
+            "f_mix",
+        )
     )
-    per_purchase = counted.selectExpr(
-        "event_id",
-        "n_view",
-        "n_click",
-        "n_touch",
-        "(1000000 * n_view) div n_touch AS view_credit_ppm",
-        "(1000000 * n_click) div n_touch AS click_credit_ppm",
+    agg = flags.agg(
+        F.count(F.lit(1)).alias("n0"),
+        F.count_if("f_exact").alias("n1"),
+        F.count_if(F.expr("f_exact AND f_boiler")).alias("n2"),
+        F.count_if(F.expr("f_exact AND f_boiler AND f_c4")).alias("n3"),
+        F.count_if(F.expr("f_exact AND f_boiler AND f_c4 AND f_clean")).alias("n4"),
+        F.count_if(
+            F.expr("f_exact AND f_boiler AND f_c4 AND f_clean AND f_mix")
+        ).alias("n5"),
     )
-    return per_purchase.agg(
-        F.count(F.lit(1)).alias("n_attributed_purchases"),
-        F.sum("view_credit_ppm").alias("view_credit_ppm_total"),
-        F.sum("click_credit_ppm").alias("click_credit_ppm_total"),
-        F.sum("n_view").alias("touches_view"),
-        F.sum("n_click").alias("touches_click"),
+    return agg.selectExpr(
+        "stack(6,"
+        " 0, 'raw', n0, 1000000L,"
+        " 1, 'exact_dedup', n1, CAST(1000000 * n1 div n0 AS BIGINT),"
+        " 2, 'boilerplate', n2, CAST(1000000 * n2 div n0 AS BIGINT),"
+        " 3, 'c4_quality', n3, CAST(1000000 * n3 div n0 AS BIGINT),"
+        " 4, 'decontaminated', n4, CAST(1000000 * n4 div n0 AS BIGINT),"
+        " 5, 'mixture_sampled', n5, CAST(1000000 * n5 div n0 AS BIGINT)"
+        ") AS (stage, stage_name, n_docs, cum_keep_ppm)"
+    ).selectExpr(
+        "stage", "stage_name", "CAST(n_docs AS BIGINT) AS n_docs", "cum_keep_ppm"
+    ).orderBy("stage")
+
+
+QUERIES["pipeline_attrition_funnel"] = pipeline_attrition_funnel
+
+ORACLES["pipeline_attrition_funnel"] = rf"""
+    WITH {_DUP_CORPUS_DUCK},
+    f_ex AS (
+        SELECT doc_id, text,
+               doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS f_exact
+        FROM corpus
+    ),
+    chunks AS (
+        SELECT doc_id,
+               array_to_string(w[i*10+1:i*10+10], ' ') AS chunk
+        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
+             unnest(range(CAST(ceil(len(w)/10.0) AS BIGINT))) AS u(i)
+    ),
+    ccount AS (
+        SELECT chunk, count(DISTINCT doc_id) AS nd FROM chunks GROUP BY chunk
+    ),
+    boiler AS (
+        SELECT doc_id, 10 * count_if(nd >= 2) < 3 * count(*) AS f_boiler
+        FROM chunks JOIN ccount USING (chunk)
+        GROUP BY doc_id
+    ),
+    ftoks AS (
+        SELECT doc_id, string_split_regex(text, '\s+') AS w FROM corpus
+    ),
+    fsh AS (
+        SELECT DISTINCT doc_id,
+               unnest(list_transform(
+                   generate_series(1, greatest(len(w) - 2, 0)),
+                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
+        FROM ftoks
+    ),
+    bench AS (SELECT DISTINCT shingle FROM fsh WHERE doc_id % 17 = 0),
+    contam AS (
+        SELECT s.doc_id,
+               NOT (count(b.shingle) >= 10
+                    OR count(b.shingle) * 5 >= count(*)) AS f_clean
+        FROM fsh s LEFT JOIN bench b USING (shingle)
+        WHERE s.doc_id % 17 != 0
+        GROUP BY s.doc_id
+    ),
+    flags AS (
+        SELECT f_ex.doc_id,
+               f_exact,
+               coalesce(f_boiler, true) AS f_boiler,
+               len(string_split(text, ' ')) >= 20
+                 AND 3 * len(string_split(text, ' '))
+                     <= list_sum(list_transform(string_split(text, ' '),
+                                                t -> length(t)))
+                 AND list_sum(list_transform(string_split(text, ' '),
+                                             t -> length(t)))
+                     <= 10 * len(string_split(text, ' ')) AS f_c4,
+               coalesce(f_clean, true) AS f_clean,
+               CAST('0x' || substr(md5('funnel' || CAST(f_ex.doc_id AS VARCHAR)),
+                                   1, 8) AS BIGINT) % 100 < 80 AS f_mix
+        FROM f_ex
+        LEFT JOIN boiler ON boiler.doc_id = f_ex.doc_id
+        LEFT JOIN contam ON contam.doc_id = f_ex.doc_id
+    ),
+    agg AS (
+        SELECT CAST(count(*) AS BIGINT) AS n0,
+               CAST(count_if(f_exact) AS BIGINT) AS n1,
+               CAST(count_if(f_exact AND f_boiler) AS BIGINT) AS n2,
+               CAST(count_if(f_exact AND f_boiler AND f_c4) AS BIGINT) AS n3,
+               CAST(count_if(f_exact AND f_boiler AND f_c4 AND f_clean)
+                    AS BIGINT) AS n4,
+               CAST(count_if(f_exact AND f_boiler AND f_c4 AND f_clean
+                             AND f_mix) AS BIGINT) AS n5
+        FROM flags
+    )
+    SELECT * FROM (
+        SELECT 0 AS stage, 'raw' AS stage_name, n0 AS n_docs,
+               CAST(1000000 AS BIGINT) AS cum_keep_ppm FROM agg
+        UNION ALL SELECT 1, 'exact_dedup', n1,
+               CAST(1000000 * n1 // n0 AS BIGINT) FROM agg
+        UNION ALL SELECT 2, 'boilerplate', n2,
+               CAST(1000000 * n2 // n0 AS BIGINT) FROM agg
+        UNION ALL SELECT 3, 'c4_quality', n3,
+               CAST(1000000 * n3 // n0 AS BIGINT) FROM agg
+        UNION ALL SELECT 4, 'decontaminated', n4,
+               CAST(1000000 * n4 // n0 AS BIGINT) FROM agg
+        UNION ALL SELECT 5, 'mixture_sampled', n5,
+               CAST(1000000 * n5 // n0 AS BIGINT) FROM agg
+    )
+    ORDER BY stage
+"""
+
+
+# ---------------------------------------------------------------------------
+# IQR outlier profiling (exact type-7 quartiles, integer-scaled)
+# ---------------------------------------------------------------------------
+def profile_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tukey-fence outlier profiling per l_returnflag: quartiles of
+    l_extendedprice, IQR, and the count of rows outside
+    [q1 - 1.5*IQR, q3 + 1.5*IQR] — the standard numeric-column health
+    check a profiler runs per ingest batch.
+
+    Quartiles are computed BY HAND as type-7 (h = (n-1)p) over
+    cent-scaled integers rather than through either engine's quantile
+    function, so the interpolation convention can never diverge: the
+    position arithmetic is integer (pos = (n-1)*25, lo = pos div 100,
+    frac in {0,.25,.5,.75}), the two contributing ranks get exact dyadic
+    coefficients, and every derived bound (1.5*IQR fences) stays an
+    exact dyadic double — bit-identical cross-engine.
+
+    Scale shape — HISTOGRAM selection, not row ranking: the first cut
+    of this query ranked every raw row inside a partition-by-flag
+    window, which at 3 flags means 3 tasks sorting everything (×100
+    measured ×30). This form aggregates to a (flag, value) histogram
+    first — a normal wide-parallel shuffle with map-side combine — and
+    runs the rank selection over the DISTINCT-VALUE rows only
+    (cumulative count brackets [cum_lo, cum_hi] locate the two
+    contributing ranks), so the low-cardinality window sees the
+    compressed domain, not the data. Outlier counting is a second pass
+    over the same histogram against broadcast fences."""
+    from pyspark.sql import Window as W
+
+    li = load(spark, sf_dir, "lineitem").selectExpr(
+        "l_returnflag AS flag",
+        # floor(x*100 + 0.5), not CAST: l_extendedprice is a DOUBLE in
+        # the fixture, and bare CAST truncates in Spark but rounds in
+        # DuckDB (DESIGN.md #23a)
+        "CAST(floor(l_extendedprice * 100 + 0.5D) AS BIGINT) AS cents",
+    )
+    hist = li.groupBy("flag", "cents").agg(F.count(F.lit(1)).alias("cnt"))
+    wp = W.partitionBy("flag")
+    cum = (
+        hist.withColumn("cum_hi", F.sum("cnt").over(wp.orderBy("cents")))
+        .withColumn("cum_lo", F.col("cum_hi") - F.col("cnt"))
+        .withColumn("n", F.sum("cnt").over(wp))
+        .withColumn("lo25", F.expr("((n - 1) * 25) div 100"))
+        .withColumn("f25", F.expr("((n - 1) * 25) % 100 / 100.0D"))
+        .withColumn("lo75", F.expr("((n - 1) * 75) div 100"))
+        .withColumn("f75", F.expr("((n - 1) * 75) % 100 / 100.0D"))
+    )
+    # both contributing ranks of a quartile may land in the SAME
+    # histogram row — add the two CASE terms per row before summing
+    stats = cum.groupBy("flag").agg(
+        F.max("n").alias("n_rows"),
+        F.sum(F.expr(
+            """CASE WHEN lo25 + 1 > cum_lo AND lo25 + 1 <= cum_hi
+                    THEN cents * (1.0D - f25) ELSE 0.0D END
+             + CASE WHEN lo25 + 2 > cum_lo AND lo25 + 2 <= cum_hi
+                    THEN cents * f25 ELSE 0.0D END""")).alias("q1_cents"),
+        F.sum(F.expr(
+            """CASE WHEN lo75 + 1 > cum_lo AND lo75 + 1 <= cum_hi
+                    THEN cents * (1.0D - f75) ELSE 0.0D END
+             + CASE WHEN lo75 + 2 > cum_lo AND lo75 + 2 <= cum_hi
+                    THEN cents * f75 ELSE 0.0D END""")).alias("q3_cents"),
+    )
+    return (
+        hist.join(F.broadcast(stats), "flag")
+        .groupBy("flag")
+        .agg(
+            F.max("n_rows").alias("n_rows"),
+            F.min("q1_cents").alias("q1_cents"),
+            F.min("q3_cents").alias("q3_cents"),
+            F.sum(F.expr(
+                "CASE WHEN cents < q1_cents - 1.5D * (q3_cents - q1_cents)"
+                " THEN cnt ELSE 0 END")).alias("n_low_outliers"),
+            F.sum(F.expr(
+                "CASE WHEN cents > q3_cents + 1.5D * (q3_cents - q1_cents)"
+                " THEN cnt ELSE 0 END")).alias("n_high_outliers"),
+        )
+        .orderBy("flag")
     )
 
 
-QUERIES["ev_attribution_linear"] = ev_attribution_linear
+QUERIES["profile_outlier_iqr"] = profile_outlier_iqr
 
-ORACLES["ev_attribution_linear"] = """
-    WITH tagged AS (
-        SELECT user_id, event_id, event_type,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        FROM events
-        WHERE event_type IN ('view', 'click', 'purchase')
+ORACLES["profile_outlier_iqr"] = """
+    WITH li AS (
+        SELECT l_returnflag AS flag,
+               CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
+        FROM lineitem
+    ),
+    ranked AS (
+        SELECT flag, cents,
+               row_number() OVER (PARTITION BY flag ORDER BY cents) AS rn,
+               count(*) OVER (PARTITION BY flag) AS n
+        FROM li
+    ),
+    pos AS (
+        SELECT flag, cents, rn, n,
+               ((n - 1) * 25) // 100 AS lo25,
+               ((n - 1) * 25) % 100 / 100.0 AS f25,
+               ((n - 1) * 75) // 100 AS lo75,
+               ((n - 1) * 75) % 100 / 100.0 AS f75
+        FROM ranked
+    ),
+    q AS (
+        SELECT flag, cents,
+               sum(CASE WHEN rn = lo25 + 1 THEN cents * (1.0 - f25)
+                        WHEN rn = lo25 + 2 THEN cents * f25
+                        ELSE 0.0 END) OVER (PARTITION BY flag) AS q1,
+               sum(CASE WHEN rn = lo75 + 1 THEN cents * (1.0 - f75)
+                        WHEN rn = lo75 + 2 THEN cents * f75
+                        ELSE 0.0 END) OVER (PARTITION BY flag) AS q3
+        FROM pos
+    )
+    SELECT flag,
+           count(*) AS n_rows,
+           min(q1) AS q1_cents,
+           min(q3) AS q3_cents,
+           CAST(sum(CASE WHEN cents < q1 - 1.5 * (q3 - q1)
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_low_outliers,
+           CAST(sum(CASE WHEN cents > q3 + 1.5 * (q3 - q1)
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_high_outliers
+    FROM q
+    GROUP BY flag
+    ORDER BY flag
+"""
+
+
+# ---------------------------------------------------------------------------
+# Benford first-digit profile
+# ---------------------------------------------------------------------------
+def profile_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-significant-digit distribution of o_totalprice vs the
+    Benford expectation — the classic fabricated-data / ingest-anomaly
+    smell test a profiler runs on monetary columns. Digit extraction is
+    pure integer/string arithmetic on exact cents (no log, no float
+    path): first char of the BIGINT's decimal rendering, which neither
+    engine sci-notates. The Benford ppm column is a shared literal
+    table (the nine constants sum to exactly 1,000,000). One scan, one
+    9-bucket aggregate — free at any scale."""
+    o = load(spark, sf_dir, "orders").selectExpr(
+        "CAST(floor(o_totalprice * 100 + 0.5D) AS BIGINT) AS cents"
+    ).filter(F.col("cents") > 0)
+    digits = o.selectExpr(
+        "CAST(substring(CAST(cents AS STRING), 1, 1) AS INT) AS digit"
+    )
+    benford = (
+        "CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 WHEN 3 THEN 124939"
+        " WHEN 4 THEN 96910 WHEN 5 THEN 79181 WHEN 6 THEN 66947"
+        " WHEN 7 THEN 57992 WHEN 8 THEN 51153 ELSE 45757 END"
+    )
+    counted = digits.groupBy("digit").agg(F.count(F.lit(1)).alias("n_orders"))
+    total = counted.agg(F.sum("n_orders").alias("total"))
+    return (
+        counted.crossJoin(total)
+        .selectExpr(
+            "digit", "n_orders",
+            "(1000000 * n_orders) div total AS obs_ppm",
+            f"{benford} AS benford_ppm",
+            f"abs((1000000 * n_orders) div total - {benford}) AS abs_dev_ppm",
+        )
+        .orderBy("digit")
+    )
+
+
+QUERIES["profile_benford_digits"] = profile_benford_digits
+
+ORACLES["profile_benford_digits"] = """
+    WITH cents AS (
+        SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+        FROM orders
+    ),
+    digits AS (
+        SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INTEGER) AS digit
+        FROM cents WHERE cents > 0
     ),
     counted AS (
-        SELECT event_id, event_type,
-               count(CASE WHEN event_type = 'view' THEN 1 END)
-                   OVER w AS n_view_raw,
-               count(CASE WHEN event_type = 'click' THEN 1 END)
-                   OVER w AS n_click_raw
-        FROM tagged
-        WINDOW w AS (PARTITION BY user_id ORDER BY us
-                     RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
+        SELECT digit, count(*) AS n_orders FROM digits GROUP BY digit
     ),
-    purchases AS (
-        SELECT event_id,
-               CAST(n_view_raw AS BIGINT) AS n_view,
-               CAST(n_click_raw AS BIGINT) AS n_click,
-               CAST(n_view_raw + n_click_raw AS BIGINT) AS n_touch
-        FROM counted
-        WHERE event_type = 'purchase' AND n_view_raw + n_click_raw > 0
+    total AS (SELECT CAST(sum(n_orders) AS BIGINT) AS total FROM counted)
+    SELECT digit, n_orders,
+           CAST((1000000 * n_orders) // total AS BIGINT) AS obs_ppm,
+           CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
+                      WHEN 3 THEN 124939 WHEN 4 THEN 96910
+                      WHEN 5 THEN 79181 WHEN 6 THEN 66947
+                      WHEN 7 THEN 57992 WHEN 8 THEN 51153
+                      ELSE 45757 END AS benford_ppm,
+           CAST(abs((1000000 * n_orders) // total
+               - CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
+                            WHEN 3 THEN 124939 WHEN 4 THEN 96910
+                            WHEN 5 THEN 79181 WHEN 6 THEN 66947
+                            WHEN 7 THEN 57992 WHEN 8 THEN 51153
+                            ELSE 45757 END) AS BIGINT) AS abs_dev_ppm
+    FROM counted CROSS JOIN total
+    ORDER BY digit
+"""
+
+
+# ---------------------------------------------------------------------------
+# Two-sample Kolmogorov-Smirnov test
+# ---------------------------------------------------------------------------
+_KS_PAIRS = [("view", "click"), ("view", "purchase"), ("click", "purchase")]
+
+
+def profile_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample KS over event-value distributions for three fixed
+    type pairs. D = max |ECDF_a - ECDF_b| computed in exact integers:
+    per distinct cents value, |cumA*nB - cumB*nA| — the ECDF difference
+    scaled by nA*nB. The window runs over the (pair, cents) histogram
+    (distinct values), never rows. The 5% critical value
+    c = 1.358*sqrt((nA+nB)/(nA*nB)) is one double expression; the
+    reject flag compares the two ppm integers."""
+    e = load(spark, sf_dir, "events").selectExpr(
+        "event_type", "CAST(round(value * 100) AS BIGINT) AS cents"
     )
-    SELECT count(*) AS n_attributed_purchases,
-           CAST(sum((1000000 * n_view) // n_touch) AS BIGINT)
-               AS view_credit_ppm_total,
-           CAST(sum((1000000 * n_click) // n_touch) AS BIGINT)
-               AS click_credit_ppm_total,
-           CAST(sum(n_view) AS BIGINT) AS touches_view,
-           CAST(sum(n_click) AS BIGINT) AS touches_click
-    FROM purchases
+    parts = []
+    for a, b in _KS_PAIRS:
+        parts.append(
+            e.filter(F.col("event_type").isin([a, b])).selectExpr(
+                f"'{a}_vs_{b}' AS pair",
+                "cents",
+                f"CASE WHEN event_type = '{a}' THEN 1 ELSE 0 END AS is_a",
+            )
+        )
+    u = parts[0].unionAll(parts[1]).unionAll(parts[2])
+    blocks = u.groupBy("pair", "cents").agg(
+        F.sum("is_a").alias("a_cnt"),
+        F.sum(F.expr("1 - is_a")).alias("b_cnt"),
+    )
+    wcum = (
+        W.partitionBy("pair").orderBy("cents")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    wall = (
+        W.partitionBy("pair").orderBy("cents")
+        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    )
+    ecdf = blocks.select(
+        "pair",
+        F.sum("a_cnt").over(wcum).alias("cum_a"),
+        F.sum("b_cnt").over(wcum).alias("cum_b"),
+        F.sum("a_cnt").over(wall).alias("n_a"),
+        F.sum("b_cnt").over(wall).alias("n_b"),
+    )
+    return (
+        ecdf.groupBy("pair")
+        .agg(
+            F.max("n_a").alias("n_a"),
+            F.max("n_b").alias("n_b"),
+            F.max(F.abs(F.expr("cum_a * n_b - cum_b * n_a"))).alias("dmax"),
+        )
+        .selectExpr(
+            "pair", "n_a", "n_b",
+            "dmax * 1000000 DIV (n_a * n_b) AS d_ppm",
+            "CAST(round(1358000.0D * sqrt(CAST(n_a + n_b AS DOUBLE)"
+            " / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))) AS BIGINT)"
+            " AS crit_ppm",
+            "CAST(CASE WHEN dmax * 1000000 DIV (n_a * n_b) >"
+            " CAST(round(1358000.0D * sqrt(CAST(n_a + n_b AS DOUBLE)"
+            " / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))) AS BIGINT)"
+            " THEN 1 ELSE 0 END AS INT) AS reject_5pct",
+        )
+        .orderBy("pair")
+    )
+
+
+QUERIES["profile_ks_test"] = profile_ks_test
+
+_KS_UNION = " UNION ALL ".join(
+    f"""SELECT '{a}_vs_{b}' AS pair,
+            CAST(round(value * 100) AS BIGINT) AS cents,
+            CASE WHEN event_type = '{a}' THEN 1 ELSE 0 END AS is_a
+        FROM events WHERE event_type IN ('{a}', '{b}')"""
+    for a, b in _KS_PAIRS
+)
+
+ORACLES["profile_ks_test"] = f"""
+    WITH u AS ({_KS_UNION}),
+    blocks AS (
+        SELECT pair, cents, SUM(is_a) AS a_cnt, SUM(1 - is_a) AS b_cnt
+        FROM u GROUP BY pair, cents
+    ),
+    ecdf AS (
+        SELECT pair,
+               SUM(a_cnt) OVER wc AS cum_a,
+               SUM(b_cnt) OVER wc AS cum_b,
+               SUM(a_cnt) OVER wa AS n_a,
+               SUM(b_cnt) OVER wa AS n_b
+        FROM blocks
+        WINDOW wc AS (PARTITION BY pair ORDER BY cents
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+               wa AS (PARTITION BY pair ORDER BY cents
+                      ROWS BETWEEN UNBOUNDED PRECEDING
+                      AND UNBOUNDED FOLLOWING)
+    ),
+    agg AS (
+        SELECT pair, MAX(n_a) AS n_a, MAX(n_b) AS n_b,
+               MAX(abs(cum_a * n_b - cum_b * n_a)) AS dmax
+        FROM ecdf GROUP BY pair
+    )
+    SELECT pair,
+           CAST(n_a AS BIGINT) AS n_a,
+           CAST(n_b AS BIGINT) AS n_b,
+           CAST(dmax * 1000000 // (n_a * n_b) AS BIGINT) AS d_ppm,
+           CAST(round(1358000.0 * sqrt(CAST(n_a + n_b AS DOUBLE)
+                / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))) AS BIGINT)
+               AS crit_ppm,
+           CAST(CASE WHEN dmax * 1000000 // (n_a * n_b) >
+                CAST(round(1358000.0 * sqrt(CAST(n_a + n_b AS DOUBLE)
+                     / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))))
+                     AS BIGINT)
+                THEN 1 ELSE 0 END AS INT) AS reject_5pct
+    FROM agg
+    ORDER BY pair
+"""
+
+
+# ---------------------------------------------------------------------------
+# Pearson correlation matrix (quantized-exact sums)
+# ---------------------------------------------------------------------------
+_CORR_PAIRS = [
+    ("qty", "price"), ("qty", "disc"), ("qty", "tax"),
+    ("price", "disc"), ("price", "tax"), ("disc", "tax"),
+]
+
+
+def profile_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Pearson correlation over lineitem's numeric columns in
+    ONE aggregate pass: quantize to integers (whole quantity, dollar
+    price, pct discount/tax), accumulate the 14 moment sums exactly,
+    then evaluate each corr as a single double expression from the
+    exact integers. n*Sxy can cross 2^63, so the FINAL arithmetic runs
+    in IEEE doubles — identical exact-integer inputs and operand order
+    give identical bits in both engines. One full scan, one reduce, no
+    shuffle of data rows — the textbook map-side-combine shape."""
+    li = load(spark, sf_dir, "lineitem").selectExpr(
+        "CAST(l_quantity AS BIGINT) AS q",
+        "CAST(round(l_extendedprice) AS BIGINT) AS e",
+        "CAST(round(l_discount * 100) AS BIGINT) AS d",
+        "CAST(round(l_tax * 100) AS BIGINT) AS t",
+    )
+    sums = li.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.sum(c).alias(f"s_{c}") for c in ("q", "e", "d", "t")],
+        *[
+            F.sum(F.expr(f"{a} * {b}")).alias(f"s_{a}{b}")
+            for a, b in [("q", "q"), ("e", "e"), ("d", "d"), ("t", "t"),
+                         ("q", "e"), ("q", "d"), ("q", "t"),
+                         ("e", "d"), ("e", "t"), ("d", "t")]
+        ],
+    )
+    short = {"qty": "q", "price": "e", "disc": "d", "tax": "t"}
+
+    def corr_expr(x: str, y: str) -> str:
+        a, b = short[x], short[y]
+        return (
+            f"CAST(round((CAST(n AS DOUBLE) * CAST(s_{a}{b} AS DOUBLE)"
+            f" - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
+            f" / (sqrt(CAST(n AS DOUBLE) * CAST(s_{a}{a} AS DOUBLE)"
+            f" - CAST(s_{a} AS DOUBLE) * CAST(s_{a} AS DOUBLE))"
+            f" * sqrt(CAST(n AS DOUBLE) * CAST(s_{b}{b} AS DOUBLE)"
+            f" - CAST(s_{b} AS DOUBLE) * CAST(s_{b} AS DOUBLE)))"
+            f" * 1000000.0D) AS BIGINT)"
+        )
+
+    stack_args = ", ".join(
+        f"'{x}_{y}', {corr_expr(x, y)}" for x, y in _CORR_PAIRS
+    )
+    return (
+        sums.selectExpr(
+            "n", f"stack({len(_CORR_PAIRS)}, {stack_args}) AS (pair, corr_ppm)"
+        )
+        .select("pair", "n", "corr_ppm")
+        .orderBy("pair")
+    )
+
+
+QUERIES["profile_corr_matrix"] = profile_corr_matrix
+
+
+def _corr_duck(x: str, y: str) -> str:
+    short = {"qty": "q", "price": "e", "disc": "d", "tax": "t"}
+    a, b = short[x], short[y]
+    return (
+        f"CAST(round((CAST(n AS DOUBLE) * CAST(s_{a}{b} AS DOUBLE)"
+        f" - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
+        f" / (sqrt(CAST(n AS DOUBLE) * CAST(s_{a}{a} AS DOUBLE)"
+        f" - CAST(s_{a} AS DOUBLE) * CAST(s_{a} AS DOUBLE))"
+        f" * sqrt(CAST(n AS DOUBLE) * CAST(s_{b}{b} AS DOUBLE)"
+        f" - CAST(s_{b} AS DOUBLE) * CAST(s_{b} AS DOUBLE)))"
+        f" * 1000000.0) AS BIGINT)"
+    )
+
+
+ORACLES["profile_corr_matrix"] = f"""
+    WITH li AS (
+        SELECT CAST(l_quantity AS BIGINT) AS q,
+               CAST(round(l_extendedprice) AS BIGINT) AS e,
+               CAST(round(l_discount * 100) AS BIGINT) AS d,
+               CAST(round(l_tax * 100) AS BIGINT) AS t
+        FROM lineitem
+    ),
+    sums AS (
+        SELECT COUNT(*) AS n,
+               SUM(q) AS s_q, SUM(e) AS s_e, SUM(d) AS s_d, SUM(t) AS s_t,
+               SUM(q*q) AS s_qq, SUM(e*e) AS s_ee, SUM(d*d) AS s_dd,
+               SUM(t*t) AS s_tt, SUM(q*e) AS s_qe, SUM(q*d) AS s_qd,
+               SUM(q*t) AS s_qt, SUM(e*d) AS s_ed, SUM(e*t) AS s_et,
+               SUM(d*t) AS s_dt
+        FROM li
+    )
+    {" UNION ALL ".join(
+        f"SELECT '{x}_{y}' AS pair, n, {_corr_duck(x, y)} AS corr_ppm FROM sums"
+        for x, y in _CORR_PAIRS
+    )}
+    ORDER BY pair
+"""
+
+
+# ---------------------------------------------------------------------------
+# Missingness / cardinality data-quality audit
+# ---------------------------------------------------------------------------
+_AUDIT_COLS = [
+    "event_id", "ts", "user_id", "event_type", "value", "props",
+]
+
+
+def profile_missingness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-column data-quality audit of events: null count, exact
+    distinct count, fill rate in ppm — the first screen a curation
+    pipeline runs on a new table. One aggregate pass; the multi-distinct
+    expands to Spark's standard expand-and-aggregate plan (same shape
+    the graded agg_multi_distinct pins)."""
+    c = load(spark, sf_dir, "events")
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for col in _AUDIT_COLS:
+        aggs.append(F.sum(F.expr(
+            f"CASE WHEN {col} IS NULL THEN 1 ELSE 0 END")).alias(f"null_{col}"))
+        aggs.append(F.countDistinct(col).alias(f"dist_{col}"))
+    sums = c.agg(*aggs)
+    stack_args = ", ".join(
+        f"'{col}', null_{col}, dist_{col}" for col in _AUDIT_COLS
+    )
+    return (
+        sums.selectExpr(
+            "n_rows",
+            f"stack({len(_AUDIT_COLS)}, {stack_args})"
+            " AS (column_name, n_null, n_distinct)",
+        )
+        .selectExpr(
+            "column_name", "n_rows", "n_null", "n_distinct",
+            "(n_rows - n_null) * 1000000 DIV n_rows AS fill_ppm",
+        )
+        .orderBy("column_name")
+    )
+
+
+QUERIES["profile_missingness_audit"] = profile_missingness_audit
+
+ORACLES["profile_missingness_audit"] = f"""
+    WITH sums AS (
+        SELECT COUNT(*) AS n_rows,
+               {", ".join(
+                   f"SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)"
+                   f" AS null_{c}, COUNT(DISTINCT {c}) AS dist_{c}"
+                   for c in _AUDIT_COLS)}
+        FROM events
+    )
+    {" UNION ALL ".join(
+        f"SELECT '{c}' AS column_name, n_rows,"
+        f" CAST(null_{c} AS BIGINT) AS n_null,"
+        f" dist_{c} AS n_distinct,"
+        f" CAST((n_rows - null_{c}) * 1000000 // n_rows AS BIGINT)"
+        f" AS fill_ppm FROM sums"
+        for c in _AUDIT_COLS)}
+    ORDER BY column_name
 """

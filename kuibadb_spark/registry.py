@@ -10,8 +10,8 @@ the first 50 keys in iteration order (observed round 1: the checked set
 was exactly keys [0:50]). all_queries() therefore emits keys the driver
 has NOT yet verified first — so each round's 50-key window sweeps new
 ground — with already-green keys appended at the back. The verified set
-is read from the repo's CORRECTNESS_r*.json artifacts at call time (a key
-counts as verified once any round records rows+schema+hash all true), so
+is read from the repo's CORRECTNESS_r*.json artifacts at call time (the
+newest artifact that records a key decides: rows+schema+hash all true), so
 the rotation is automatic: after round N lands its artifact, round N+1's
 window starts where N stopped, and a key whose oracle regressed drops
 back to the front.
@@ -22,32 +22,12 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 from kuibadb_spark.functions import scalar, udfs
 from kuibadb_spark.operators import (
     aggregates,
     collections,
-    curation,
-    curation2,
-    curation3,
-    curation4,
-    curation5,
-    curation6,
-    curation7,
-    curation8,
-    curation9,
-    curation10,
-    curation11,
-    curation12,
-    curation13,
-    curation14,
-    curation15,
-    curation16,
-    curation17,
-    curation18,
-    curation19,
-    curation20,
-    curation21,
     dedup,
     events,
     graph,
@@ -55,10 +35,7 @@ from kuibadb_spark.operators import (
     pipelines,
     recursive,
     relational,
-    relational2,
-    relational3,
-    relational4,
-    relational5,
+    sample,
     similarity,
     temporal,
     text,
@@ -82,54 +59,11 @@ _MODULES = [
     pipelines,
     graph,
     recursive,
-    curation,
     multimodal,
     aggregates,
-    relational5,
-    relational4,
-    relational3,
-    relational2,
     relational,
     windows,
-    # round-3 additions rank LAST on purpose: their unverified keys must
-    # not displace the round-2-planned 48 out of the round-3 grading
-    # window (they are graded in round 4's sweep instead)
-    curation2,
-    # round-4 additions rank after curation2's nine round-5-window
-    # stragglers for the same reason: slots 50-58 must stay exactly
-    # those nine after round 4's artifact lands
-    curation3,
-    curation4,
-    curation5,
-    # round-4 in-round additions: after curation5 so rounds 4 AND 5's
-    # planned windows (the 100 keys unverified at round-4 start) are
-    # never displaced; these become gradable from round 6
-    curation6,
-    curation7,
-    curation8,
-    curation9,
-    curation10,
-    curation11,
-    curation12,
-    curation13,
-    curation14,
-    # round-7 additions rank last: their five unverified keys follow the
-    # seven round-6 stragglers (curation12-14) inside the round-7 window
-    # — the verdict-mandated freeze holds (window head = those seven)
-    curation15,
-    # round-7 batch 2: after curation15 for the same reason
-    curation16,
-    curation17,
-    # round-8 additions rank last (freeze discipline): with 316/316
-    # verified these enter the next window head automatically
-    curation18,
-    curation19,
-    # round-9 additions rank last: their two unverified keys queue
-    # behind the round-9 reverify set inside the grading window
-    curation20,
-    # round-10 additions rank last: the three curation21 keys queue
-    # behind the round-10 reverify set (16 replanned keys) in the window
-    curation21,
+    sample,
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -178,11 +112,17 @@ _REVERIFY = frozenset({
 })
 
 
-def driver_verified() -> frozenset:
-    """Keys with a fully-green row (rows/schema/hash all true) in any
-    CORRECTNESS_r*.json the driver has produced so far."""
-    ok: set = set()
-    for p in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
+def _driver_states() -> dict:
+    """key -> True (rows/schema/hash all green) or False, as recorded by
+    the NEWEST CORRECTNESS_r*.json that mentions the key: a key green in
+    an early round and red in a later one counts as red."""
+    def round_no(path: str) -> int:
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        return int(m.group(1)) if m else -1
+
+    paths = glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))
+    state: dict = {}
+    for p in sorted(paths, key=round_no):
         try:
             with open(p) as f:
                 data = json.load(f)
@@ -191,27 +131,23 @@ def driver_verified() -> frozenset:
         if not isinstance(data, dict):
             continue
         for key, row in data.items():
-            if isinstance(row, dict) and all(
-                row.get(k) is True
-                for k in ("rows_match", "schema_match", "hash_match")
-            ):
-                ok.add(key)
-    return frozenset(ok)
+            if isinstance(row, dict):
+                state[key] = all(
+                    row.get(k) is True
+                    for k in ("rows_match", "schema_match", "hash_match")
+                )
+    return state
+
+
+def driver_verified() -> frozenset:
+    """Keys whose newest driver verdict is fully green."""
+    return frozenset(k for k, ok in _driver_states().items() if ok)
 
 
 def driver_failed() -> frozenset:
-    """Keys the driver attempted but did not fully pass in any round —
-    exactly the ones whose fixes need re-verification first."""
-    seen: set = set()
-    for p in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(data, dict):
-            seen.update(k for k, v in data.items() if isinstance(v, dict))
-    return frozenset(seen - driver_verified())
+    """Keys whose newest driver verdict is not fully green — exactly the
+    ones whose fixes need re-verification first."""
+    return frozenset(k for k, ok in _driver_states().items() if not ok)
 
 
 def _merged() -> dict:

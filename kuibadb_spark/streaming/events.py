@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kuibadb_spark.catalog import table_path
+from kuibadb_spark.operators import events as event_ops
+
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
     """Fixture generations differ: ts is TIMESTAMP(NANOS) (read as raw long
@@ -787,4 +789,173 @@ ORACLES["stream_daily_active_users"] = """
     FROM events
     GROUP BY day
     ORDER BY day
+"""
+
+
+# ---------------------------------------------------------------------------
+# streaming peak concurrency: the incremental form of op 5
+# ---------------------------------------------------------------------------
+def stream_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental peak-concurrency: sessions maintained by Structured
+    Streaming's native session_window (gap 10 min — the window end IS
+    last event + gap, exactly the batch op's end padding), then the same
+    two-level ±1 delta scan over the FINISHED sessions. The streaming
+    half is the stateful part (session assembly under a watermark); the
+    carry across hour buckets is batch post-processing on the bounded
+    session list — the lambda-architecture cut every streaming overlap
+    pipeline makes. Checked against the SAME oracle as batch
+    ev_peak_concurrency."""
+    from pyspark.sql import Window
+
+    ev = read_events_stream(spark, sf_dir)
+    sess_stream = (
+        ev.withWatermark("ts", "30 minutes")
+        .groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            "user_id",
+            F.expr("unix_micros(w.start)").alias("s"),
+            F.expr("unix_micros(w.end)").alias("e"),
+        )
+    )
+    # complete mode: append would hold back every session the watermark
+    # has not passed, silently dropping the tail ~40 min of sessions on
+    # finite input (measured: last hour bucket missing + lower peak) —
+    # the same reason session_values runs complete (streaming/events.py)
+    sess = run_to_memory(sess_stream, mode="complete")
+    bucket = 3600 * 1_000_000
+    deltas = sess.selectExpr("s AS t", "1 AS d").unionAll(
+        sess.selectExpr("e AS t", "-1 AS d")
+    ).withColumn("hb", F.expr(f"t div {bucket}"))
+    in_bucket = Window.partitionBy("hb").orderBy("t", "d").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    run = deltas.withColumn("r", F.sum("d").over(in_bucket))
+    per_bucket = run.groupBy("hb").agg(
+        F.max("r").alias("peak_in"), F.sum("d").alias("net")
+    )
+    carry = Window.orderBy("hb").rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        per_bucket.withColumn(
+            "base", F.coalesce(F.sum("net").over(carry), F.lit(0))
+        )
+        .selectExpr("hb", "CAST(base + peak_in AS BIGINT) AS peak_concurrency")
+        .orderBy("hb")
+    )
+
+
+QUERIES["stream_peak_concurrency"] = stream_peak_concurrency
+# Same delta-scan oracle EXCEPT the sessionize boundary: Spark's
+# session_window is half-open [start, last+gap), so an event arriving at
+# exactly last+gap starts a NEW session (split at diff >= gap), while
+# the batch op's lag-scan keeps diff == gap in the same session (split
+# at diff > gap). One character of SQL — the measured mismatch at
+# sf0.01 was exactly the equal-boundary sessions.
+ORACLES["stream_peak_concurrency"] = event_ops.ORACLES[
+    "ev_peak_concurrency"
+].replace("> 600000000", ">= 600000000")
+assert (
+    ORACLES["stream_peak_concurrency"]
+    != event_ops.ORACLES["ev_peak_concurrency"]
+)
+
+
+# ---------------------------------------------------------------------------
+# stream-stream funnel join
+# ---------------------------------------------------------------------------
+def stream_funnel_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Signup→purchase conversions as a STREAM-STREAM self-join: the
+    signup branch joins the purchase branch on user within a 24 h
+    event-time bound, watermarks on both sides sizing the join state —
+    the interval-join shape (user did X then Y within T) that only
+    stream-stream joins express incrementally. The joined pairs emit in
+    append mode; the per-signup-day rollup is a batch aggregate over
+    the sink (chaining a second stateful agg would also work on Spark
+    4; the join IS the op under test). Oracle: the identical
+    time-bounded SQL join."""
+    ev = read_events_stream(spark, sf_dir)
+    signups = (
+        ev.filter(F.col("event_type") == "signup")
+        .selectExpr("user_id AS s_user", "ts AS s_ts")
+        .withWatermark("s_ts", "1 hour")
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .selectExpr("user_id AS p_user", "ts AS p_ts")
+        .withWatermark("p_ts", "1 hour")
+    )
+    joined = signups.join(
+        purchases,
+        F.expr(
+            "s_user = p_user AND p_ts >= s_ts"
+            " AND p_ts <= s_ts + INTERVAL 24 HOURS"
+        ),
+    )
+    out = run_to_memory(joined, mode="append")
+    return (
+        out.selectExpr("CAST(date_trunc('day', s_ts) AS timestamp_ntz) AS d")
+        .groupBy("d")
+        .agg(F.count(F.lit(1)).alias("n_conversion_pairs"))
+        .orderBy("d")
+    )
+
+
+QUERIES["stream_funnel_conversions"] = stream_funnel_conversions
+
+ORACLES["stream_funnel_conversions"] = """
+    WITH s AS (
+        SELECT user_id, ts FROM events WHERE event_type = 'signup'
+    ),
+    p AS (
+        SELECT user_id, ts FROM events WHERE event_type = 'purchase'
+    )
+    SELECT CAST(date_trunc('day', s.ts) AS TIMESTAMP) AS d,
+           COUNT(*) AS n_conversion_pairs
+    FROM s JOIN p ON s.user_id = p.user_id
+       AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL 24 HOUR
+    GROUP BY date_trunc('day', s.ts)
+    ORDER BY d
+"""
+
+
+# ---------------------------------------------------------------------------
+# streaming daily downtime (chained dedup -> aggregate)
+# ---------------------------------------------------------------------------
+def stream_daily_downtime(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily down-minutes, incrementally: error events dedup to one row
+    per minute (watermarked dropDuplicates — bounded state), then a
+    second stateful aggregate counts minutes per day — the chained
+    dedup→agg shape proven by stream_daily_active_users, pointed at the
+    ops metric ev_uptime_sla reads. Emits only days that saw at least
+    one error minute (a streaming job cannot invent rows for silent
+    days; the batch twin closes that gap with its calendar join)."""
+    ev = read_events_stream(spark, sf_dir)
+    per_minute = (
+        ev.filter(F.col("event_type") == "error")
+        .withColumn("minute", F.date_trunc("minute", "ts"))
+        .withWatermark("minute", "1 hour")
+        .dropDuplicates(["minute"])
+    )
+    daily = (
+        per_minute
+        .groupBy(F.window("minute", "1 day").alias("w"))
+        .agg(F.count(F.lit(1)).alias("down_minutes"))
+    )
+    out = run_to_memory(daily, mode="complete")
+    return (
+        out.selectExpr(
+            "CAST(w.start AS timestamp_ntz) AS d", "down_minutes"
+        )
+        .orderBy("d")
+    )
+
+
+QUERIES["stream_daily_downtime"] = stream_daily_downtime
+
+ORACLES["stream_daily_downtime"] = """
+    SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
+           COUNT(DISTINCT date_trunc('minute', ts)) AS down_minutes
+    FROM events WHERE event_type = 'error'
+    GROUP BY date_trunc('day', ts)
+    ORDER BY d
 """

@@ -393,6 +393,22 @@ def test_sql_dml_routing(engine, tmp_path):
     assert engine.table("t", version=2).count() == 3  # after INSERT…SELECT
 
 
+def test_update_where_inside_literal_or_subquery(engine):
+    """UPDATE splits SET from WHERE at the first top-level WHERE: one
+    inside a string literal or a subquery belongs to the SET expression,
+    and the subquery reads the table's current snapshot."""
+    engine.create_table("t", SCHEMA)
+    engine.sql("INSERT INTO t VALUES (1, 2, 'a'), (2, 3, 'b')")
+    n = engine.sql("UPDATE t SET c = 'x WHERE y' WHERE a = 1").collect()
+    assert n[0]["count"] == 1
+    rows = {tuple(r) for r in engine.table("t").collect()}
+    assert rows == {(1, 2, "x WHERE y"), (2, 3, "b")}
+
+    engine.sql("UPDATE t SET c = (SELECT max(c) FROM t WHERE a = 2) WHERE a = 1")
+    rows = {tuple(r) for r in engine.table("t").collect()}
+    assert rows == {(1, 2, "b"), (2, 3, "b")}
+
+
 def test_alter_table_schema_evolution(engine, tmp_path):
     """ADD/DROP COLUMN are metadata-only: no file rewrite, old rows
     null-fill new columns, pinned versions keep their era's schema."""

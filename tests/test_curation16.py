@@ -1,4 +1,5 @@
-"""Round-7 batch 2 (curation16): plan-shape guards and the invariants
+"""Epoch schedule, arrival dispersion, centroid confusion and shingle
+spectrum operators: plan-shape guards and the invariants
 the fixture cannot exercise (value parity is covered by the
 auto-parameterized oracle suite).
 """
@@ -7,10 +8,17 @@ from __future__ import annotations
 
 import pytest
 
-from kuibadb_spark.operators import curation16
-from kuibadb_spark.operators.curation16 import _epoch_schedule
+from kuibadb_spark.operators import dedup, events, sample, similarity
+from kuibadb_spark.operators.sample import _epoch_schedule
+from kuibadb_spark.registry import all_queries
 
-KEYS = sorted(curation16.QUERIES)
+KEYS = (
+    "dedup_shingle_df_spectrum",
+    "ev_arrival_dispersion",
+    "sample_epoch_schedule",
+    "sim_centroid_confusion",
+)
+QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", KEYS)
@@ -18,7 +26,7 @@ def test_no_cartesian(spark, sf_dir, name):
     """Cartesian products are banned outright; sample_epoch_schedule's
     1-row-totals broadcast is the only (whitelisted) BNLJ here."""
     plan = (
-        curation16.QUERIES[name](spark, sf_dir)
+        QUERIES[name](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -53,7 +61,7 @@ def test_epoch_cap_binds_on_skewed_corpus(spark):
 def test_epoch_schedule_budget_conservation(spark, sf_dir):
     """Served tokens never exceed targets, and the total target is the
     half-corpus budget up to per-source integer-div truncation."""
-    rows = curation16.sample_epoch_schedule(spark, sf_dir).collect()
+    rows = sample.sample_epoch_schedule(spark, sf_dir).collect()
     assert rows
     corpus = sum(r["tokens"] for r in rows)
     target_total = sum(r["target_tokens"] for r in rows)
@@ -69,7 +77,7 @@ def test_dispersion_poisson_scale(spark, sf_dir):
     synthetic near-uniform arrival stream must read as
     UNDER-dispersed (well below Poisson's 1000 milli) — a bursty flag
     here would mean the formula broke."""
-    rows = curation16.ev_arrival_dispersion(spark, sf_dir).collect()
+    rows = events.ev_arrival_dispersion(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert -1 <= r["dispersion_milli"] < 1_000, r
@@ -79,7 +87,7 @@ def test_dispersion_poisson_scale(spark, sf_dir):
 def test_centroid_confusion_bounds(spark, sf_dir):
     """Cosines live in [-1e6, 1e6] ppm and the matrix is strictly
     upper-triangular over all label pairs."""
-    rows = curation16.sim_centroid_confusion(spark, sf_dir).collect()
+    rows = similarity.sim_centroid_confusion(spark, sf_dir).collect()
     labels = set()
     for r in rows:
         assert r["label_a"] < r["label_b"], r
@@ -92,7 +100,7 @@ def test_centroid_confusion_bounds(spark, sf_dir):
 def test_shingle_spectrum_mass_adds_up(spark, sf_dir):
     """Band posting-shares must sum to ~1e6 ppm (integer-div slack
     ≤ one ppm per band) and band counts reconcile with postings."""
-    rows = curation16.dedup_shingle_df_spectrum(spark, sf_dir).collect()
+    rows = dedup.dedup_shingle_df_spectrum(spark, sf_dir).collect()
     assert rows
     share = sum(r["postings_share_ppm"] for r in rows)
     assert 1_000_000 - len(rows) <= share <= 1_000_000

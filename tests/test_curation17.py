@@ -1,19 +1,26 @@
-"""Round-7 batch 3 (curation17): plan guards + semantic invariants
+"""Bot decile screen, n-gram coverage and dedup-aware mixture
+operators: plan guards + semantic invariants
 (value parity is the auto-parameterized oracle suite's job)."""
 
 from __future__ import annotations
 
 import pytest
 
-from kuibadb_spark.operators import curation17
+from kuibadb_spark.operators import events, sample, text
+from kuibadb_spark.registry import all_queries
 
-KEYS = sorted(curation17.QUERIES)
+KEYS = (
+    "ev_bot_decile_screen",
+    "sample_dedup_aware_mixture",
+    "text_ngram_coverage_curve",
+)
+QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", KEYS)
 def test_no_cartesian(spark, sf_dir, name):
     plan = (
-        curation17.QUERIES[name](spark, sf_dir)
+        QUERIES[name](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -28,7 +35,7 @@ def test_no_cartesian(spark, sf_dir, name):
 def test_bot_screen_decile_partition(spark, sf_dir):
     """Deciles partition the user population near-evenly and the
     suspect verdict is exactly the (1,1) cell of the decile grid."""
-    rows = curation17.ev_bot_decile_screen(spark, sf_dir).collect()
+    rows = events.ev_bot_decile_screen(spark, sf_dir).collect()
     assert rows
     n = len(rows)
     for d in range(1, 11):
@@ -44,7 +51,7 @@ def test_coverage_curve_monotone(spark, sf_dir):
     """Coverage is non-decreasing in K and reaches 1e6 ppm when K
     exceeds the vocabulary."""
     rows = sorted(
-        curation17.text_ngram_coverage_curve(spark, sf_dir).collect(),
+        text.text_ngram_coverage_curve(spark, sf_dir).collect(),
         key=lambda r: r["k"],
     )
     assert len(rows) == 3
@@ -60,7 +67,7 @@ def test_dedup_mixture_shift_conserves(spark, sf_dir):
     """Share shifts are zero-sum up to integer-div slack, mirror
     sources lose their entire share, and the shifted share flows to
     their base sources (which gain)."""
-    rows = curation17.sample_dedup_aware_mixture(spark, sf_dir).collect()
+    rows = sample.sample_dedup_aware_mixture(spark, sf_dir).collect()
     mirrors = [r for r in rows if r["source"].endswith("_mirror")]
     bases = [r for r in rows if not r["source"].endswith("_mirror")]
     assert mirrors and bases

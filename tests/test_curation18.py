@@ -1,13 +1,22 @@
-"""Round-8 batch (curation18): plan guards + semantic invariants
+"""Decile-band, assortativity, holdout-contamination and cluster
+spectrum operators: plan guards + semantic invariants
 (value parity is the auto-parameterized oracle suite's job)."""
 
 from __future__ import annotations
 
 import pytest
 
-from kuibadb_spark.operators import curation18
+from kuibadb_spark.operators import dedup, graph, sample, text, windows
+from kuibadb_spark.registry import all_queries
 
-KEYS = sorted(curation18.QUERIES)
+KEYS = (
+    "dedup_cluster_size_spectrum",
+    "graph_degree_assortativity",
+    "sample_holdout_contamination",
+    "text_length_decile_bands",
+    "w_decile_bands_orders",
+)
+QUERIES = all_queries()
 
 # distributed_ntile's ≤32-row prefix cross is a whitelisted BNLJ
 # (tools/plan_audit.py BNLJ_OK; build side bounded by cluster shape)
@@ -17,7 +26,7 @@ _NTILE_BNLJ = {"w_decile_bands_orders", "text_length_decile_bands"}
 @pytest.mark.parametrize("name", KEYS)
 def test_no_cartesian_no_global_window(spark, sf_dir, name):
     plan = (
-        curation18.QUERIES[name](spark, sf_dir)
+        QUERIES[name](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -31,7 +40,7 @@ def test_decile_bands_partition_and_order(spark, sf_dir):
     """Bands partition the order book near-evenly, cover all 10
     deciles, and band value ranges are non-overlapping and ordered."""
     rows = sorted(
-        curation18.w_decile_bands_orders(spark, sf_dir).collect(),
+        windows.w_decile_bands_orders(spark, sf_dir).collect(),
         key=lambda r: r["decile"],
     )
     assert [r["decile"] for r in rows] == list(range(1, 11))
@@ -46,7 +55,7 @@ def test_decile_bands_partition_and_order(spark, sf_dir):
 def test_length_bands_monotone(spark, sf_dir):
     """Token ranges ascend with the decile and totals reconcile."""
     rows = sorted(
-        curation18.text_length_decile_bands(spark, sf_dir).collect(),
+        text.text_length_decile_bands(spark, sf_dir).collect(),
         key=lambda r: r["decile"],
     )
     assert [r["decile"] for r in rows] == list(range(1, 11))
@@ -60,7 +69,7 @@ def test_length_bands_monotone(spark, sf_dir):
 def test_assortativity_in_range(spark, sf_dir):
     """A Pearson correlation lives in [-1e6, 1e6] ppm; moments are
     positive on the non-empty fixture graph."""
-    [r] = curation18.graph_degree_assortativity(spark, sf_dir).collect()
+    [r] = graph.graph_degree_assortativity(spark, sf_dir).collect()
     assert r["n_edges"] > 0
     assert 0 < r["mean_src_deg_milli"] <= 10_000
     assert 0 < r["mean_dst_deg_milli"] <= 10_000
@@ -71,7 +80,7 @@ def test_holdout_contamination_bounds(spark, sf_dir):
     """Every fixture source contributes holdout docs (the %7 split is
     coprime with the %20 source assignment); rates live in [0, 1e6]
     and contaminated counts never exceed doc counts."""
-    rows = curation18.sample_holdout_contamination(spark, sf_dir).collect()
+    rows = sample.sample_holdout_contamination(spark, sf_dir).collect()
     assert len(rows) == 20
     for r in rows:
         assert 0 < r["n_holdout_docs"], r
@@ -84,7 +93,7 @@ def test_cluster_spectrum_reconciles(spark, sf_dir):
     """Bands 1/2/3-4 must all appear (the two mirror tiers construct
     them), docs ≥ clusters per band, and the mirrored corpus total
     reconciles: base + base/10 + base/50 documents."""
-    rows = curation18.dedup_cluster_size_spectrum(spark, sf_dir).collect()
+    rows = dedup.dedup_cluster_size_spectrum(spark, sf_dir).collect()
     bands = {r["band"]: r for r in rows}
     assert {"1_unique", "2_pair", "3_4"} <= set(bands)
     for r in rows:

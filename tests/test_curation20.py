@@ -1,8 +1,8 @@
-"""curation20: inter-arrival spectrum + per-source quality quota."""
+"""Inter-arrival spectrum + per-source quality quota."""
 
 from __future__ import annotations
 
-from kuibadb_spark.operators import curation20
+from kuibadb_spark.operators import events, sample
 
 
 def _plan(df) -> str:
@@ -13,7 +13,7 @@ def test_interarrival_spectrum_shape(spark, sf_dir):
     """Buckets are a valid log2 spectrum: shares sum to ~1e6 per type,
     bucket b covers gaps in [2^(b-1), 2^b) seconds, and the bounded
     bucket range holds (30-day fixture span → bucket ≤ 22)."""
-    rows = curation20.ev_interarrival_spectrum(spark, sf_dir).collect()
+    rows = events.ev_interarrival_spectrum(spark, sf_dir).collect()
     assert rows
     by_type: dict = {}
     for r in rows:
@@ -30,7 +30,7 @@ def test_interarrival_no_global_window(spark, sf_dir):
     """The lag window is user-partitioned and the share window runs
     over the (type, bucket) frame — no partition-less window over the
     event rows may appear."""
-    p = _plan(curation20.ev_interarrival_spectrum(spark, sf_dir))
+    p = _plan(events.ev_interarrival_spectrum(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -38,7 +38,7 @@ def test_interarrival_no_global_window(spark, sf_dir):
 def test_quota_per_source_bounds(spark, sf_dir):
     """Exactly ≤5 docs per source, ranks contiguous from 1, scores
     non-increasing within a source, diversity in (0, 1e6]."""
-    rows = curation20.sample_quota_per_source(spark, sf_dir).collect()
+    rows = sample.sample_quota_per_source(spark, sf_dir).collect()
     assert rows
     per_src: dict = {}
     for r in rows:
@@ -57,5 +57,5 @@ def test_quota_plan_group_limits(spark, sf_dir):
     """The rank ≤ 5 filter must collapse to WindowGroupLimit (partial
     per-partition top-k before the source exchange) — the bounded-
     headline pattern; a plain Window+Filter would shuffle every doc."""
-    p = _plan(curation20.sample_quota_per_source(spark, sf_dir))
+    p = _plan(sample.sample_quota_per_source(spark, sf_dir))
     assert "WindowGroupLimit" in p, p

@@ -1,10 +1,10 @@
-"""curation21: curriculum ordering + source modularity + token Gini."""
+"""Curriculum ordering + source modularity + token Gini."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kuibadb_spark.operators import curation21
+from kuibadb_spark.operators import graph, sample, text
 
 
 def _plan(df) -> str:
@@ -16,7 +16,7 @@ def test_curriculum_phases_balanced(spark, sf_dir):
     totals differ by ≤1); score ranges are non-overlapping ASCENDING
     across phases (phase p's max ≤ phase p+1's min — the whole point of
     a curriculum ordering)."""
-    rows = curation21.sample_curriculum_order(spark, sf_dir).collect()
+    rows = sample.sample_curriculum_order(spark, sf_dir).collect()
     assert rows
     per_phase: dict = {}
     rng: dict = {}
@@ -48,7 +48,7 @@ def test_curriculum_no_global_window(spark, sf_dir):
     """Phases come from the distributed ntile — no partition-less
     window over the corpus may appear; the prefix cross is the
     whitelisted ≤32-row BNLJ."""
-    p = _plan(curation21.sample_curriculum_order(spark, sf_dir))
+    p = _plan(sample.sample_curriculum_order(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "_rk_pid" in p  # the ranks.py range-id plumbing is in play
 
@@ -60,7 +60,7 @@ def test_source_modularity_invariants(spark, sf_dir):
     from kuibadb_spark.operators.graph import _edges
 
     m = _edges(spark, sf_dir).count()
-    rows = curation21.graph_source_modularity(spark, sf_dir).collect()
+    rows = graph.graph_source_modularity(spark, sf_dir).collect()
     assert rows and m > 0
     assert sum(r["deg_sum"] for r in rows) == 2 * m
     assert sum(r["intra_edges"] for r in rows) <= m
@@ -74,25 +74,23 @@ def test_gini_bounds_and_uniform_zero(spark, sf_dir):
     """Fixture ginis are valid ppm in [0, 1e6); a hand-built
     uniform-length frame reads EXACTLY 0 and a maximally-skewed one
     approaches (n-1)/n — pinning the rank-block histogram formula."""
-    rows = curation21.text_gini_token_concentration(spark, sf_dir).collect()
+    rows = text.text_gini_token_concentration(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 <= r["gini_ppm"] < 1_000_000, r
         assert r["n_docs"] > 0 and r["tokens_total"] > 0
-
-    import kuibadb_spark.operators.curation21 as c21
 
     def probe(vals):
         df = spark.createDataFrame(
             [("s0", i, "w " * v) for i, v in enumerate(vals)],
             "source string, doc_id long, text string",
         ).selectExpr("source", "doc_id", "trim(text) AS text")
-        orig = c21.load
+        orig = text.load
         try:
-            c21.load = lambda s, sf, t: df
-            return c21.text_gini_token_concentration(spark, "_").collect()[0]
+            text.load = lambda s, sf, t: df
+            return text.text_gini_token_concentration(spark, "_").collect()[0]
         finally:
-            c21.load = orig
+            text.load = orig
 
     assert probe([7, 7, 7, 7])["gini_ppm"] == 0
     # one 97-token doc among four 1-token docs: G = exact rank formula
@@ -104,9 +102,9 @@ def test_gini_bounds_and_uniform_zero(spark, sf_dir):
 def test_gini_and_modularity_scalar_schemas(spark, sf_dir):
     """Driver canonicalizer contract: scalar-only output columns."""
     for fn in (
-        curation21.sample_curriculum_order,
-        curation21.graph_source_modularity,
-        curation21.text_gini_token_concentration,
+        sample.sample_curriculum_order,
+        graph.graph_source_modularity,
+        text.text_gini_token_concentration,
     ):
         for f in fn(spark, sf_dir).schema.fields:
             assert f.dataType.typeName() not in (

@@ -102,7 +102,7 @@ def test_decontaminate_broadcasts_benchmark_shingles(spark):
     """The benchmark shingle set must reach the corpus side as a
     broadcast (benchmarks are MB-scale; the corpus is the 100 TB side) —
     a shuffle join here would shuffle every corpus shingle."""
-    from kuibadb_spark.operators.curation import text_decontaminate
+    from kuibadb_spark.operators.text import text_decontaminate
 
     p = _plan(text_decontaminate(spark, SF))
     assert "BroadcastHashJoin" in p
@@ -152,7 +152,7 @@ def test_pq_broadcasts_codebooks(spark):
 def test_dsir_broadcasts_count_tables(spark):
     """text_dsir_importance: the 1024-bucket target/background count
     tables broadcast; the corpus-side rows never exceed (doc_id, int)."""
-    from kuibadb_spark.operators.curation import text_dsir_importance
+    from kuibadb_spark.operators.text import text_dsir_importance
 
     p = _plan(text_dsir_importance(spark, SF))
     assert p.count("BroadcastHashJoin") >= 2
@@ -174,7 +174,7 @@ def test_cc_iteration_cache_hygiene(spark):
     convergence: the two shared edge tables + ≤1 live label table
     (localCheckpointed rounds show as cached RDDs too, so allow one
     extra in-flight)."""
-    from kuibadb_spark.operators.graph import dedup_connected_components
+    from kuibadb_spark.operators.dedup import dedup_connected_components
 
     sc = spark.sparkContext
     before = sc._jsc.getPersistentRDDs().size()
@@ -222,6 +222,32 @@ def test_registry_orders_unverified_first():
     n_failed = len(failed & set(keys))
     rv_in = [k for k in keys if k in reverify and k not in failed]
     assert keys[n_failed:n_failed + len(rv_in)] == rv_in
+
+
+def test_registry_newest_verdict_decides(tmp_path, monkeypatch):
+    """A key green in an early artifact and red in a later one counts as
+    failed and returns to the front of the window; a key red first and
+    green later counts as verified."""
+    import json
+
+    from kuibadb_spark import registry
+
+    keys = list(registry._merged())
+    regressed, recovered = keys[-1], keys[-2]
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    red = dict(green, hash_match=False)
+    (tmp_path / "CORRECTNESS_r03.json").write_text(
+        json.dumps({regressed: green, recovered: red})
+    )
+    (tmp_path / "CORRECTNESS_r12.json").write_text(
+        json.dumps({regressed: red, recovered: green})
+    )
+    monkeypatch.setattr(registry, "_REPO_ROOT", str(tmp_path))
+    assert regressed in registry.driver_failed()
+    assert regressed not in registry.driver_verified()
+    assert recovered in registry.driver_verified()
+    assert recovered not in registry.driver_failed()
+    assert next(iter(registry.all_queries())) == regressed
 
 
 def test_concurrent_sessions_no_theta_join(spark):

@@ -13,13 +13,13 @@ import hashlib
 
 import pandas as pd
 
-from kuibadb_spark.operators.curation7 import (
+from kuibadb_spark.operators.graph import _HOUR_CAP, _hour_users_capped
+from kuibadb_spark.operators.multimodal import (
     _CDC_M,
     _CDC_MASK,
     _CDC_POW,
     _cdc_chunk_batches,
 )
-from kuibadb_spark.operators.graph import _HOUR_CAP, _hour_users_capped
 
 
 def test_hour_cap_binds_on_dense_bucket(spark):

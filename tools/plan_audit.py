@@ -81,13 +81,20 @@ BNLJ_OK = {
     # round-3 additions, audited at round-4 start — every build side is
     # a constant-bounded broadcast:
     "agg_histogram_quantiles",   # 1-row global stats + 5-row quantile targets
-    "agg_hll_sliding_distinct",  # 1-row global stats cross (curation4:511)
-    "dedup_bloom_prefilter",     # 1-row probe-count cross (curation4:826)
-    "ev_association_rules",      # 1-row basket-count cross (curation4:338)
-    "ev_diff_in_diff",           # 1-row period-split cross (curation5:118)
-    "ev_survival_km",            # 1-row observation-horizon cross (curation3:2226)
-    "ts_autocorrelation",        # fixed lag-list cross, |lags|=7 (curation5:216)
-    "ts_changepoint_cusum",      # 1-row global mean cross (curation3:1276)
+    "agg_hll_sliding_distinct",  # 1-row global stats cross
+                                 # (aggregates.agg_hll_sliding_distinct)
+    "dedup_bloom_prefilter",     # 1-row probe-count cross
+                                 # (dedup.dedup_bloom_prefilter)
+    "ev_association_rules",      # 1-row basket-count cross
+                                 # (events.ev_association_rules)
+    "ev_diff_in_diff",           # 1-row period-split cross
+                                 # (events.ev_diff_in_diff)
+    "ev_survival_km",            # 1-row observation-horizon cross
+                                 # (events.ev_survival_km)
+    "ts_autocorrelation",        # fixed lag-list cross, |lags|=7
+                                 # (temporal.ts_autocorrelation)
+    "ts_changepoint_cusum",      # 1-row global mean cross
+                                 # (temporal.ts_changepoint_cusum)
     "w_pareto_abc",              # 1-row revenue-total cross + ≤32-row
                                  # distributed-prefix-sum cross (r9)
     # round-4 additions:
@@ -111,7 +118,8 @@ BNLJ_OK = {
     # round-10 additions:
     "sample_curriculum_order",   # ≤32-row distributed-ntile prefix cross
                                  # (plans/ranks.py class)
-    "graph_source_modularity",   # 1-row edge-count m cross (curation21)
+    "graph_source_modularity",   # 1-row edge-count m cross
+                                 # (graph.graph_source_modularity)
 }
 
 # Global (partition-less) windows whose INPUT is bounded by something

@@ -63,23 +63,23 @@ REP = [
     # window representatives) + the rewritten CDC boundary hash
     "mm_cdc_chunking", "graph_label_propagation", "mm_phash_dct",
     "sample_importance_resampling", "ev_markov_absorption",
-    # round-7 additions (curation15) — sharded docs keep the same 20
+    # round-7 additions — sharded docs keep the same 20
     # sources at 10x docs each, so the contamination matrix's per-
     # shingle source sets stay bounded while its input rows scale
     "text_chunk_overlap", "text_quality_robust_z",
     "text_cross_source_overlap", "sim_dim_energy_profile",
     "dedup_tokens_saved",
-    # round-7 batch 2 (curation16)
+    # round-7 batch 2
     "sample_epoch_schedule", "dedup_shingle_df_spectrum",
     "sim_centroid_confusion", "ev_arrival_dispersion",
-    # round-7 batch 3 (curation17)
+    # round-7 batch 3
     "ev_bot_decile_screen", "text_ngram_coverage_curve",
     "sample_dedup_aware_mixture",
-    # round-8 additions (curation18)
+    # round-8 additions
     "w_decile_bands_orders", "text_length_decile_bands",
     "graph_degree_assortativity", "sample_holdout_contamination",
     "dedup_cluster_size_spectrum",
-    # round-8 batch 2 (curation19)
+    # round-8 batch 2
     "text_ocr_artifact_screen", "ev_dau_wau_stickiness",
     "sample_boundary_hash_split", "graph_reciprocity",
     "text_lang_mismatch_screen",
@@ -152,7 +152,7 @@ REP100 = [
     "w_ranking_parts", "agg_cube", "agg_salted_skew",
     "sample_temperature_mixture", "mm_dedup_binary",
     "stream_tumbling_hourly",
-    # round-7 additions: the two curation15 keys with shuffle-heavy
+    # round-7 additions: the two keys with shuffle-heavy
     # shapes (matrix output stays O(sources²)=20×20 at any scale; the
     # dedup ledger's hash groups grow to 100 copies per text, still
     # one partial-aggregated exchange)
