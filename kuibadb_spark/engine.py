@@ -23,6 +23,16 @@ DDL. LOCK TABLE is accepted and ignored (immutable snapshots make PG's
 reference's stub (src/commands/typecmds.rs:17-28). SET/SHOW route
 declared GUC names (src/guc/gucdef.yaml) through gucs.py and fall through
 to Spark conf for everything else.
+
+Name resolution (Engine._resolve, once per statement that evaluates SQL):
+`t FOR VERSION AS OF n` becomes a view pinned to version n; then every
+engine table whose name appears as a word in the statement is
+registered as a temp view of its snapshot (over-matching registers an
+unneeded view, never a wrong one), and the kb_* catalog views are built
+only when named. Inside a transaction a table's snapshot is pinned at its
+first touch by any statement (repeatable read per table); untouched
+tables stay unpinned. A user's own Spark view over an engine table is
+not followed: only names in the statement are resolved.
 """
 
 from __future__ import annotations
@@ -118,7 +128,7 @@ _UPDATE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _WHERE_RE = re.compile(r"\s+WHERE\s+", re.IGNORECASE)
-_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
+_CATALOG_RE = re.compile(r"\bkb_(?:tables|columns|settings)\b", re.IGNORECASE)
 _ALTER_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(\w+)\s+"
     r"(?:ADD\s+COLUMN\s+(\w+)\s+([\w()<>, ]+?)|DROP\s+COLUMN\s+(\w+))\s*;?\s*$",
@@ -320,9 +330,12 @@ class Engine:
 
     # -- SQL entry point ---------------------------------------------------
     def sql(self, text: str) -> DataFrame | None:
-        """Run SQL. Registered tables resolve by name; txn/lock statements
-        are accepted no-ops (returns None), like the reference's utility
-        path but without the machinery (SURVEY.md §2.4).
+        """Run SQL. Each statement that evaluates SQL text goes through
+        _resolve once: it sees exactly the engine tables it names, each at
+        one snapshot (live, or pinned at first touch in a transaction);
+        a user's Spark view over an engine table is not followed.
+        Txn/lock statements are accepted no-ops (returns None), like the
+        reference's utility path (SURVEY.md §2.4).
 
         DML (INSERT INTO … VALUES/SELECT, DELETE FROM, UPDATE … SET) is
         routed to the engine's manifest-transactional methods — the SQL
@@ -405,12 +418,6 @@ class Engine:
                     [(_guc_fmt(self.gucs.show(name)),)], f"{name} STRING"
                 )
             # not a GUC → Spark's own SHOW (TABLES/DATABASES/…)
-        m = _CTAS_RE.match(text)
-        if m:
-            name, body = m.group(1), m.group(2)
-            self._register_all()
-            n = self._create_loaded(name, self.spark.sql(body))
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
         m = _CREATE_RE.match(text)
         if m:
             # column list à la the reference's grammar (tablecmds.rs:103-148):
@@ -440,16 +447,6 @@ class Engine:
                 if not m.group(1):  # no IF EXISTS → propagate, like PG
                     raise
             return None
-        m = _INSERT_RE.match(text)
-        if m:
-            name, body = m.group(1), m.group(2)
-            self._register_all()
-            q = f"SELECT * FROM ({body})" if body[:6].upper() == "VALUES" else body
-            src = self.spark.sql(q)
-            schema = T.StructType.fromDDL(self._read_m(name)["schema"])
-            # positional column matching, like INSERT without a column list
-            n = self.insert(name, src.toDF(*[f.name for f in schema.fields]))
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
         m = _ALTER_RE.match(text)
         if m:
             if m.group(2):
@@ -461,25 +458,28 @@ class Engine:
         if m:
             name, direction, path, tail = m.groups()
             o = _parse_copy_options(tail)
-            if direction.upper() == "FROM":
-                n = self.copy_from(
-                    name, path,
-                    delimiter=o.get("delimiter", ","),
-                    null_marker=o.get("null_marker", r"\N"),
-                    parallel=o.get("parallel"),
-                    csv=o.get("csv", False),
-                )
-            else:
-                n = self.copy_to(
-                    name, path,
-                    delimiter=o.get("delimiter", ","),
-                    null_marker=o.get("null_marker", r"\N"),
-                    parallel=o.get("parallel"),
-                    csv=o.get("csv", False),
-                )
+            copy = self.copy_from if direction.upper() == "FROM" else self.copy_to
+            n = copy(name, path, delimiter=o.get("delimiter", ","),
+                     null_marker=o.get("null_marker", r"\N"),
+                     parallel=o.get("parallel"), csv=o.get("csv", False))
             return self.spark.createDataFrame([(n,)], "count BIGINT")
         if re.match(r"^\s*COPY\b", text, re.IGNORECASE):
             raise SqlSyntaxError(f"unsupported COPY syntax: {text.strip()[:80]!r}")
+        # every statement below evaluates SQL text: resolve it once
+        text, _ = self._resolve(text)
+        m = _CTAS_RE.match(text)
+        if m:
+            n = self._create_loaded(m.group(1), self.spark.sql(m.group(2)))
+            return self.spark.createDataFrame([(n,)], "count BIGINT")
+        m = _INSERT_RE.match(text)
+        if m:
+            name, body = m.group(1), m.group(2)
+            q = f"SELECT * FROM ({body})" if body[:6].upper() == "VALUES" else body
+            src = self.spark.sql(q)
+            schema = T.StructType.fromDDL(self._read_m(name)["schema"])
+            # positional column matching, like INSERT without a column list
+            n = self.insert(name, src.toDF(*[f.name for f in schema.fields]))
+            return self.spark.createDataFrame([(n,)], "count BIGINT")
         m = _MERGE_RE.match(text)
         if m:
             name, body, keys = m.group(1), m.group(2), m.group(3)
@@ -489,7 +489,6 @@ class Engine:
                 raise SqlSyntaxError(
                     "MERGE requires at least one WHEN clause"
                 )
-            self._register_all()
             src = self.spark.sql(body)
             upd, ins = self.merge(
                 name, src, [k.strip() for k in keys.split(",")],
@@ -504,8 +503,6 @@ class Engine:
             return self.spark.createDataFrame([(n,)], "count BIGINT")
         m = _UPDATE_RE.match(text)
         if m:
-            if _SUBQUERY_RE.search(text):
-                self._register_all()  # a subquery reads current snapshots
             set_list, where = _split_where(m.group(2))
             assignments = {}
             for part in _split_top_level(set_list):
@@ -513,16 +510,6 @@ class Engine:
                 assignments[col.strip()] = expr.strip()
             n = self.update(m.group(1), assignments, where or "true")
             return self.spark.createDataFrame([(n,)], "count BIGINT")
-        self._register_all()
-        # time travel: rewrite `t FOR VERSION AS OF n` to a temp view
-        # pinned to that manifest version (Engine.table(version=n))
-        def _pin(m: re.Match) -> str:
-            tbl, ver = m.group(1), int(m.group(2))
-            view = f"{tbl.lower()}__v{ver}"
-            self.table(tbl, version=ver).createOrReplaceTempView(view)
-            return view
-
-        text = _VERSION_AS_OF_RE.sub(_pin, text)
         return self.spark.sql(text)
 
     def run_script(self, script: str) -> DataFrame | None:
@@ -962,6 +949,7 @@ class Engine:
             if not os.path.exists(mf.manifest_path(tdir)):
                 raise UndefinedTable(f"table {name!r} does not exist")
             shutil.rmtree(tdir)
+        self.spark.catalog.dropTempView(name.lower())
 
     def describe(self, name: str) -> list[dict]:
         """DESCRIBE TABLE: ordered attribute list from the manifest (the
@@ -1435,17 +1423,14 @@ class Engine:
                 "CREATE MATERIALIZED VIEW is DDL and autocommits; "
                 "not allowed inside an open transaction"
             )
-        self._register_all()
-        # dependency set = engine tables the body references by name
-        # (word match — over-matching only widens the staleness check)
-        deps = {
-            t: mf.read_manifest(self._table_dir(t))["version"]
-            for t in self.tables()
-            if re.search(rf"\b{re.escape(t)}\b", body_sql, re.IGNORECASE)
-        }
+        # dependency set = the tables _resolve registered (word match —
+        # over-matching only widens the staleness check)
+        body, refs = self._resolve(body_sql)
+        deps = {t: mf.read_manifest(self._table_dir(t))["version"]
+                for t in refs}
         # the MV stamps ride create_table's own initial manifest write —
         # no out-of-band _persist (round-6 storage review)
-        self._create_loaded(name, self.spark.sql(body_sql),
+        self._create_loaded(name, self.spark.sql(body),
                             {"mv_sql": body_sql, "mv_deps": deps})
 
     def _create_loaded(self, name: str, df: DataFrame,
@@ -1479,8 +1464,8 @@ class Engine:
         }
         if current == deps:
             return False
-        self._register_all()
-        aligned = self._align(self.spark.sql(sql), _phys_schema(m["schema"]))
+        body, _ = self._resolve(sql)
+        aligned = self._align(self.spark.sql(body), _phys_schema(m["schema"]))
         # mv_deps rides the SAME locked swap as the data (round-6
         # storage review): a trailing unlocked _persist could clobber a
         # concurrent commit and rewrite the version copy in place. The
@@ -1818,10 +1803,24 @@ class Engine:
         return df.select(*[df[f.name].cast(f.dataType).alias(f.name)
                            for f in schema.fields])
 
-    def _register_all(self) -> None:
-        for t in self.tables():
+    def _resolve(self, text: str) -> tuple[str, list[str]]:
+        """The one name-resolution step (module docstring): returns the
+        rewritten text and the engine tables it references. No cache keyed
+        by version: Engines can share one SparkSession's temp views."""
+        def _pin(m: re.Match) -> str:
+            tbl, ver = m.group(1), int(m.group(2))
+            view = f"{tbl.lower()}__v{ver}"
+            self.table(tbl, version=ver).createOrReplaceTempView(view)
+            return view
+
+        text = _VERSION_AS_OF_RE.sub(_pin, text)
+        words = set(re.findall(r"\w+", text.lower()))
+        refs = [t for t in self.tables() if t in words]
+        for t in refs:
             self.table(t).createOrReplaceTempView(t)
-        self._register_catalog()
+        if _CATALOG_RE.search(text):
+            self._register_catalog()
+        return text, refs
 
     def _register_catalog(self) -> None:
         """System catalog views, the reference's kb_* catalog surface

@@ -636,3 +636,93 @@ def test_failed_ctas_and_mv_leave_no_table(engine):
     engine.sql("CREATE MATERIALIZED VIEW mv AS SELECT a FROM src WHERE a > 1")
     assert engine.table("c").count() == 2
     assert [r.a for r in engine.table("mv").collect()] == [2]
+
+
+def test_drop_table_drops_its_view(engine):
+    """A dropped table no longer resolves: the statement fails at
+    analysis, not at execution over the deleted files."""
+    engine.sql("CREATE TABLE d (a INT)")
+    engine.sql("INSERT INTO d VALUES (1)")
+    assert engine.sql("SELECT * FROM d").count() == 1
+    engine.sql("DROP TABLE d")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        engine.sql("SELECT * FROM d")
+
+
+# kind → (statement reading u, table it writes, rows when u is read live,
+# rows when u is pinned FOR VERSION AS OF 1); u is [1] at v1, [1, 2] live
+_SNAPSHOT_DML = {
+    "insert_select": ("INSERT INTO t SELECT a + 10 FROM u{pin}", "t",
+                      [1, 2, 3, 11, 12], [1, 2, 3, 11]),
+    "ctas": ("CREATE TABLE c AS SELECT a FROM u{pin}", "c", [1, 2], [1]),
+    "update": ("UPDATE t SET a = a + (SELECT sum(a) FROM u{pin}) WHERE a = 3",
+               "t", [1, 2, 6], [1, 2, 4]),
+    "delete": ("DELETE FROM t WHERE a IN (SELECT a FROM u{pin})", "t",
+               [3], [2, 3]),
+    "merge": ("MERGE INTO t USING (SELECT a + 10 AS a FROM u{pin}) s ON (a) "
+              "WHEN NOT MATCHED THEN INSERT *", "t",
+              [1, 2, 3, 11, 12], [1, 2, 3, 11]),
+}
+
+
+@pytest.mark.parametrize("pinned", [False, True], ids=["live", "version_1"])
+@pytest.mark.parametrize("kind", sorted(_SNAPSHOT_DML))
+def test_dml_reads_statement_snapshot(engine, kind, pinned):
+    """Every DML kind resolves the tables its subquery or source names at
+    the statement's own snapshot: a view left by an earlier SELECT is not
+    reused after a later INSERT, and FOR VERSION AS OF works inside it."""
+    stmt, target, live, v1 = _SNAPSHOT_DML[kind]
+    engine.sql("CREATE TABLE t (a INT)")
+    engine.sql("INSERT INTO t VALUES (1), (2), (3)")
+    engine.sql("CREATE TABLE u (a INT)")
+    engine.sql("INSERT INTO u VALUES (1)")
+    engine.sql("SELECT * FROM u").collect()
+    engine.sql("INSERT INTO u VALUES (2)")
+    engine.sql(stmt.format(pin=" FOR VERSION AS OF 1" if pinned else ""))
+    rows = sorted(r.a for r in engine.table(target).collect())
+    assert rows == (v1 if pinned else live)
+
+
+def test_views_registered_follow_the_statement(engine, monkeypatch):
+    """A statement registers views for the tables it names, not for the
+    whole catalog: the count is the same at 1 and at 65 tables."""
+    DataFrame = type(engine.spark.range(1))
+    orig = DataFrame.createOrReplaceTempView
+    names: list[str] = []
+
+    def counted(df, name):
+        names.append(name)
+        return orig(df, name)
+
+    monkeypatch.setattr(DataFrame, "createOrReplaceTempView", counted)
+
+    def views(stmt: str) -> list[str]:
+        names.clear()
+        engine.sql(stmt).collect()
+        return list(names)
+
+    engine.create_table("t0", "a INT")
+    for n_tables in (1, 65):
+        for i in range(len(engine.tables()), n_tables):
+            engine.create_table(f"t{i}", "a INT")
+        assert len(engine.tables()) == n_tables
+        assert views("SELECT 1+1") == []
+        assert views("SELECT count(*) FROM t0") == ["t0"]
+        catalog = views("SELECT count(*) FROM kb_tables")
+        assert "kb_tables" in catalog
+        assert set(catalog) <= {"kb_tables", "kb_columns", "kb_settings"}
+
+
+def test_transaction_repeatable_read_through_sql(engine, spark):
+    """Inside BEGIN … COMMIT a table read through Engine.sql stays at its
+    first-touch snapshot while another session commits to it; after
+    COMMIT the next read sees the other session's row."""
+    engine.sql("CREATE TABLE t (a INT)")
+    engine.sql("INSERT INTO t VALUES (1), (2)")
+    other = Engine(spark, warehouse=engine.warehouse)
+    engine.sql("BEGIN")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
+    other.sql("INSERT INTO t VALUES (3)")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 2
+    engine.sql("COMMIT")
+    assert engine.sql("SELECT count(*) AS n FROM t").collect()[0].n == 3
