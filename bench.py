@@ -2,21 +2,30 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "value_with_build": ..., "sf": ..., "queries_n": ..., "detail": ...}.
-Per-query timings live in BENCH_DETAIL.json next to this file — the
-driver parses only a 2000-char stdout tail, so the printed line is kept
-small by contract (round-6 VERDICT #2: the inline per-query map outgrew
-the tail and the round recorded no bench value).
+Per-query timings live in detail files next to this file — the driver
+parses only a 2000-char stdout tail, so the printed line is kept small
+by contract (round-6 VERDICT #2: the inline per-query map outgrew the
+tail and the round recorded no bench value). Every run writes
+BENCH_DETAIL_c{cpus}.json; BENCH_DETAIL.json, the file the driver reads,
+is rewritten unless it already holds a run of the same git SHA at more
+cores.
 
 Each query is forced with a noop-format write (full computation, no
 driver-side collect) after a warmup of the session on a trivial action.
+This module is also the measurement core of the scale guards
+(tools/sf1bench.py, tools/sf100bench.py, tools/scaling.py): time_keys
+is the one timing loop, baseline the one reader of the bench side of
+their ratios, write_detail the one artifact writer.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+from datetime import datetime, timezone
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
@@ -152,12 +161,19 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("kuibadb-bench")
+def headline_keys() -> list[str]:
+    """The HEADLINE keys the registry defines, in HEADLINE order."""
     queries = registry.all_queries()
-    names = [n for n in HEADLINE if n in queries]
+    return [n for n in HEADLINE if n in queries]
 
+
+def time_keys(
+    spark, names: list[str], sf_dir: str, max_runs: int = 4
+) -> tuple[dict[str, float], dict[str, float]]:
+    """The bench measurement protocol, shared by bench.py and the scale
+    guards. Returns (steady-state seconds per key, construction seconds
+    per key whose construction took ≥1 s)."""
+    queries = registry.all_queries()
     # Warm up the whole execution path — parquet reader, shuffle, codegen,
     # noop sink — so per-query timings measure the queries, not session
     # bring-up (the reference's thread-per-connection model has the same
@@ -185,11 +201,12 @@ def main() -> None:
         # pays codegen JIT; clearCache drops any persist() a query did
         # internally so later runs re-execute the whole plan. N is
         # adaptive: while the two best runs disagree by >30% (codegen /
-        # GC jitter dominates sub-second queries), run again up to 4 —
-        # keeps round-over-round comparisons from reading noise as a
-        # regression without paying 4x on the stable heavy queries.
+        # GC jitter dominates sub-second queries), run again up to
+        # max_runs — keeps round-over-round comparisons from reading
+        # noise as a regression without paying 4x on the stable heavy
+        # queries.
         runs: list[float] = []
-        while len(runs) < 4:
+        while len(runs) < max_runs:
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
@@ -200,19 +217,68 @@ def main() -> None:
                     break
         timings[name] = round(min(runs), 3)
         spark.catalog.clearCache()
+        # stderr: stdout carries only the one summary line
+        print(f"{name:34s} {timings[name]:8.2f}", file=sys.stderr, flush=True)
+    return timings, builds
 
+
+def _git_sha() -> str | None:
+    try:
+        r = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=_REPO_ROOT, capture_output=True, text=True,
+        )
+    except OSError:
+        return None
+    return r.stdout.strip() if r.returncode == 0 else None
+
+
+def _read_detail(dirpath, name: str) -> dict:
+    try:
+        with open(os.path.join(dirpath, name)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def write_detail(dirpath, name: str, payload: dict) -> dict:
+    """Write one bench artifact, stamped with what produced it: git SHA,
+    host `nproc`, the cores used (SPARK_GRAFT_CPUS) and a UTC time. The
+    payload names its own `fixture`. Returns the stamped payload."""
+    stamped = {
+        **payload,
+        "sha": _git_sha(),
+        "nproc": os.cpu_count(),
+        "cpus": default_parallelism(),
+        "utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
+    }
+    with open(os.path.join(dirpath, name), "w") as f:
+        json.dump(stamped, f, indent=1, sort_keys=True)
+    return stamped
+
+
+def baseline(
+    cpus: int, dirpath=_REPO_ROOT
+) -> tuple[dict[str, float], dict]:
+    """Build+query seconds per key from the bench run at `cpus` cores
+    (BENCH_DETAIL_c{cpus}.json, else BENCH_DETAIL.json), plus the file
+    read and its SHA and core count — the scale guards' ratio basis."""
+    for name in (f"BENCH_DETAIL_c{cpus}.json", "BENCH_DETAIL.json"):
+        d = _read_detail(dirpath, name)
+        if d:
+            break
+    else:
+        return {}, {"file": None, "sha": None, "cpus": None}
+    build = d.get("build", {})
+    totals = {n: t + build.get(n, 0.0) for n, t in d["queries"].items()}
+    return totals, {"file": name, "sha": d.get("sha"), "cpus": d.get("cpus")}
+
+
+def publish(
+    dirpath, timings: dict[str, float], builds: dict[str, float], sf_dir: str
+) -> str:
+    """Write the bench detail files and return the one summary line."""
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Per-run detail files are keyed by core count (round-10 VERDICT #2:
-    # the driver benches at two core counts back-to-back, and a single
-    # shared detail filename meant the 8-core run clobbered the 32-core
-    # per-query map before the driver's comparison ran — PERF_r10 came
-    # back with n_common=0 and an empty scaling block). The cpu-suffixed
-    # file is authoritative (named in the printed line's `detail` field);
-    # the legacy unsuffixed BENCH_DETAIL.json keeps being written with
-    # identical content so fixed-name readers (tools/sf100bench.py,
-    # tools/sf1bench.py baselines) stay working.
-    cpus = default_parallelism()
-    detail_name = f"BENCH_DETAIL_c{cpus}.json"
     summary = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
@@ -226,20 +292,35 @@ def main() -> None:
         ),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "queries_n": len(timings),
-        "detail": detail_name,
+        "detail": "BENCH_DETAIL.json",
     }
     # Per-query timings + one-time eager-construction costs go to a file:
     # the driver json-parses only a 2000-char stdout TAIL, and round 6's
     # 62-query inline map outgrew it — BENCH_r06.json recorded
     # "parsed": null, i.e. no bench value at all (round-6 VERDICT #2).
     # The final printed line must stay a few hundred bytes forever.
-    detail = {**summary, "queries": timings, "build": builds}
-    for fname in (detail_name, "BENCH_DETAIL.json"):
-        with open(os.path.join(_REPO_ROOT, fname), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
+    detail = {
+        **summary, "queries": timings, "build": builds, "fixture": sf_dir
+    }
+    # The driver benches at two core counts back to back and reads only
+    # the fixed name, so the fixed name keeps the highest-core run of a
+    # checkout (PERF_r10/r11 came back empty when the 8-core run
+    # clobbered the 32-core map); every run keeps its own cpu-keyed twin.
+    cpus = default_parallelism()
+    stamped = write_detail(dirpath, f"BENCH_DETAIL_c{cpus}.json", detail)
+    prev = _read_detail(dirpath, "BENCH_DETAIL.json")
+    if not (prev.get("sha") == stamped["sha"] and prev.get("cpus", 0) > cpus):
+        write_detail(dirpath, "BENCH_DETAIL.json", detail)
     line = json.dumps(summary)
     assert len(line) < 1500, f"bench summary line too long ({len(line)})"
-    print(line)
+    return line
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("kuibadb-bench")
+    timings, builds = time_keys(spark, headline_keys(), sf_dir)
+    print(publish(_REPO_ROOT, timings, builds, sf_dir))
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
 """True sf1-class fixture WITHOUT shard replication (round-9 judge ask
-#6): tools/scaleup.py's ×10 key-offset shards preserve join structure
-but give every document/embedding 9 identical twins, multiplying
+#6): a fixture built from ×10 key-offset shards of sf0.1 preserves join
+structure but gives every document/embedding 9 identical twins, multiplying
 near-dup candidate pairs by the shard count (mm_ahash_near_dup measured
 ×31,000 output at ×100, SCALING.md) — every dedup-family scale read on
 that fixture measures the replication, not the engine. This generator

@@ -3,7 +3,7 @@ grows.
 
     python tools/lengthprobe.py [build|run]
 
-The ×10/×100 fixtures (tools/scaleup.py) replicate ROWS; payload and
+The ×10/×100 fixtures (tools/genfixture.py) grow ROWS; payload and
 document LENGTH stay fixture-sized. But at 100 TB multimodal/text scale,
 length is exactly the axis that grows — and the round-5 quadratic class
 (per-position `substring(s, i, 1)` / per-window substring re-walks) is

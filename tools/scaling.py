@@ -1,78 +1,65 @@
 """Measure how the bench headline queries scale across the driver's
-three fixture scale factors and write SCALING.md — the local-mode
-evidence behind the 100 TB design claims: per-query time vs data size,
-with the fixed per-stage overhead (codegen, task dispatch) visible as
-the flat floor at small SFs.
+three fixture scale factors and print the table as markdown — the
+local-mode evidence behind the 100 TB design claims: per-query time vs
+data size, with the fixed per-stage overhead (codegen, task dispatch)
+visible as the flat floor at small SFs.
 
-Run from the repo root: python tools/scaling.py
+Run from the repo root: python tools/scaling.py > table.md
+(paste the table into SCALING.md; the tool never writes that file,
+which also holds the round-by-round scale history).
 """
 
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from bench import HEADLINE  # noqa: E402
-from kuibadb_spark import registry  # noqa: E402
-from kuibadb_spark.session import get_spark  # noqa: E402
+from bench import headline_keys, time_keys  # noqa: E402
+from kuibadb_spark.session import default_parallelism, get_spark  # noqa: E402
 
 SFS = ["0.001", "0.01", "0.1"]
 
 
 def main() -> None:
     spark = get_spark("kuibadb-scaling")
-    queries = registry.all_queries()
-    warm = spark.read.parquet("/root/testdata/sf0.001/region.parquet")
-    warm.groupBy("r_name").count().write.format("noop").mode("overwrite").save()
-
-    results: dict[str, dict[str, float]] = {}
-    for sf in SFS:
-        sf_dir = f"/root/testdata/sf{sf}"
-        for name in HEADLINE:
-            df = queries[name](spark, sf_dir)
-            best = float("inf")
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            results.setdefault(name, {})[sf] = round(best, 3)
-            spark.catalog.clearCache()
+    names = headline_keys()
+    cpus = default_parallelism()
+    results = {
+        sf: time_keys(spark, names, f"/root/testdata/sf{sf}")[0] for sf in SFS
+    }
 
     lines = [
         "# SCALING — headline queries across fixture scale factors",
         "",
-        "Best-of-2 cache-cleared runs (the bench protocol) at each driver",
-        "SF on local[32]. `x100` is t(sf0.1)/t(sf0.001) over a 100× data",
+        "Adaptive best-of-≤4 cache-cleared runs (the bench protocol,",
+        f"`bench.time_keys`) at each driver SF on local[{cpus}].",
+        "`x100` is t(sf0.1)/t(sf0.001) over a 100× data",
         "increase: values far below 100 mean the local runtime is",
         "dominated by fixed per-stage costs (codegen compilation, task",
         "dispatch) that amortize to ~zero at cluster scale — the data-",
         "proportional part of the work is what a 1000-executor cluster",
-        "distributes. Generated by tools/scaling.py; regenerate when the",
+        "distributes. Printed by tools/scaling.py; regenerate when the",
         "headline set or the operators change.",
         "",
         "| query | sf0.001 (s) | sf0.01 (s) | sf0.1 (s) | x100 |",
         "|---|---|---|---|---|",
     ]
-    for name in HEADLINE:
-        r = results[name]
+    for name in names:
+        r = {sf: results[sf][name] for sf in SFS}
         ratio = r["0.1"] / r["0.001"] if r["0.001"] > 0 else float("nan")
         lines.append(
             f"| `{name}` | {r['0.001']:.3f} | {r['0.01']:.3f} "
             f"| {r['0.1']:.3f} | {ratio:.1f} |"
         )
-    totals = {sf: sum(results[n][sf] for n in HEADLINE) for sf in SFS}
+    totals = {sf: sum(results[sf].values()) for sf in SFS}
     lines.append(
         f"| **total** | {totals['0.001']:.3f} | {totals['0.01']:.3f} "
         f"| {totals['0.1']:.3f} | {totals['0.1'] / totals['0.001']:.1f} |"
     )
-    lines.append("")
-    (ROOT / "SCALING.md").write_text("\n".join(lines))
-    print(f"wrote {ROOT / 'SCALING.md'}")
+    print("\n".join(lines))
 
 
 if __name__ == "__main__":

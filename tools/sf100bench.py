@@ -16,7 +16,8 @@ Measurement: SINGLE-SHOT steady state after one warm-up action (these
 keys run 2-80 s each at ×100; best-of-N would double a ~5-minute
 sweep for noise that the two-decade alarm band already absorbs), with
 one-time eager-build cost split out and the comparison run on
-BUILD+QUERY totals, same as tools/sf1bench.py.
+BUILD+QUERY totals against the bench run at the same core count
+(bench.baseline), same as tools/sf1bench.py.
 
 Alarm rule (the gate `tools/preflight.py --gates` re-checks at HEAD):
 a probe key whose (×100 total) / (sf0.1 total) ratio exceeds ×40 over
@@ -38,14 +39,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from kuibadb_spark import registry  # noqa: E402
-from kuibadb_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
+from kuibadb_spark.session import default_parallelism, get_spark  # noqa: E402
 
 SF100 = "/tmp/sf100true"
 RATIO_ALARM = 40.0  # two decades of data in ≤ ×40 time = far sub-linear
@@ -101,42 +101,14 @@ def main() -> int:
     ):
         print(f"building true ×100 fixture at {SF100}…", flush=True)
         build(spark, scale=100, dst=SF100)
-    spark.read.parquet(f"{SF100}/region.parquet").count()  # warm
-
-    queries = registry.all_queries()
-    timings: dict[str, float] = {}
-    builds: dict[str, float] = {}
-    for name in PROBES:
-        tb = time.perf_counter()
-        df = queries[name](spark, SF100)
-        build_s = time.perf_counter() - tb
-        if build_s >= 1.0:
-            builds[name] = round(build_s, 3)
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        print(f"{name:34s} {timings[name]:8.2f}", flush=True)
-
-    base: dict[str, float] = {}
-    base_build: dict[str, float] = {}
-    try:
-        with open(ROOT / "BENCH_DETAIL.json") as f:
-            d = json.load(f)
-            base = d.get("queries", {})
-            base_build = d.get("build", {})
-    except Exception:
-        pass
-
-    def _base_tot(n: str) -> float:
-        return base.get(n, 0.0) + base_build.get(n, 0.0)
+    timings, builds = bench.time_keys(spark, PROBES, SF100, max_runs=1)
+    base, source = bench.baseline(default_parallelism())
 
     def _ratios(t: dict[str, float]) -> dict[str, float]:
         return {
-            n: round((t[n] + builds.get(n, 0.0)) / _base_tot(n), 1)
+            n: round((t[n] + builds.get(n, 0.0)) / base[n], 1)
             for n in t
-            if _base_tot(n) > 0
+            if base.get(n, 0.0) > 0
         }
 
     def _ceiling(n: str) -> float:
@@ -166,23 +138,17 @@ def main() -> int:
     retries: dict[str, dict[str, float]] = {}
     alarm_timings = dict(timings)
     for n in _alarm_keys(ratios):
-        # drop the first frame before re-timing so builder-internal
-        # localCheckpoint blocks can be GC-released and don't skew the
-        # re-read (clearCache drops persist()s but not checkpoints)
-        spark.catalog.clearCache()
-        df = queries[n](spark, SF100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        rq = round(time.perf_counter() - t0, 3)
-        del df
-        spark.catalog.clearCache()
+        # a fresh construction (the first frame went out of scope with
+        # the first time_keys call, so its localCheckpoint blocks can be
+        # released); its build time is discarded, as stated above
+        rq = bench.time_keys(spark, [n], SF100, max_runs=1)[0][n]
         retries[n] = {"first_query_s": timings[n], "retry_query_s": rq}
         alarm_timings[n] = min(timings[n], rq)
         print(f"retry {n:28s} {rq:8.2f}", flush=True)
     alarm_ratios = _ratios(alarm_timings)
     alarms = sorted(
         (
-            {"query": n, "sf01_total_s": round(_base_tot(n), 2),
+            {"query": n, "sf01_total_s": round(base[n], 2),
              "sf100_total_s": round(
                  alarm_timings[n] + builds.get(n, 0.0), 2),
              "ratio": alarm_ratios[n], "ceiling": _ceiling(n)}
@@ -204,10 +170,12 @@ def main() -> int:
         "per_key_ceilings": {
             n: c for n, (c, _) in SF100_SUPERLINEAR_OK.items()
         },
-        "basis": "build+query per key vs BENCH_DETAIL.json sf0.1 totals;"
+        "basis": f"build+query per key vs {source['file']} sf0.1 totals;"
                  " timings/queries/value are FIRST readings (retries feed"
                  " only the alarm decision); build-phase noise is not"
                  " retried",
+        "baseline": source,
+        "fixture": SF100,
         "alarms": alarms,
         "retries": retries,
         "queries": timings,
@@ -215,8 +183,7 @@ def main() -> int:
         "ratios_vs_sf01": ratios,
         "alarm_ratios": alarm_ratios,
     }
-    with open(ROOT / "BENCH_SF100_DETAIL.json", "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
+    bench.write_detail(ROOT, "BENCH_SF100_DETAIL.json", out)
     print(json.dumps({k: out[k] for k in (
         "metric", "value", "value_with_build", "queries_n")}))
     print("sf100bench", "PASSED" if not alarms
