@@ -41,18 +41,24 @@ import os
 import re
 import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+import pyarrow as pa
+from pyspark.sql import (
+    DataFrame, Observation, SparkSession, functions as F, types as T,
+)
 
 from kuibadb_spark.errors import (
+    CheckViolation,
     DuplicateTable,
+    NotNullViolation,
     SerializationFailure,
     SqlSyntaxError,
     StagedFileVanished,
     UndefinedTable,
 )
 from kuibadb_spark.functions.pg_ops import translate as _pg_translate
-from kuibadb_spark.gucs import GucSession, _fmt as _guc_fmt
+from kuibadb_spark.gucs import GUCS, GucSession, _fmt as _guc_fmt
 from kuibadb_spark.plans import manifest as mf, zonemap
 from kuibadb_spark.session import get_spark
 from kuibadb_spark.sources.copy import (
@@ -374,31 +380,29 @@ class Engine:
         m = _REFRESH_MV_RE.match(text)
         if m:
             refreshed = self.refresh_materialized_view(m.group(1))
-            return self.spark.createDataFrame([(refreshed,)], "refreshed BOOLEAN")
+            return self._result([(refreshed,)], "refreshed BOOLEAN")
         m = _OPTIMIZE_RE.match(text)
         if m:
             zcols = [c.strip() for c in m.group(2).split(",")] if m.group(2) else None
             n = self.compact(m.group(1), target_files=4, zorder_by=zcols)
-            return self.spark.createDataFrame([(n,)], "files BIGINT")
+            return self._result([(n,)], "files BIGINT")
         m = _VACUUM_RE.match(text)
         if m:
             n = self.gc(m.group(1))
-            return self.spark.createDataFrame([(n,)], "removed BIGINT")
+            return self._result([(n,)], "removed BIGINT")
         m = _ANALYZE_RE.match(text)
         if m and self._table_exists(m.group(1)):
             st = self.analyze(m.group(1))
-            return self.spark.createDataFrame(
-                [(st["rows"],)], "rows BIGINT"
-            )
+            return self._result([(st["rows"],)], "rows BIGINT")
         m = _HISTORY_RE.match(text)
         if m and self._table_exists(m.group(1)):
-            return self.spark.createDataFrame(
+            return self._result(
                 self.history(m.group(1)),
                 "version INT, n_files INT, schema STRING, available BOOLEAN",
             )
         m = _DESCRIBE_RE.match(text)
         if m and self._table_exists(m.group(1)):
-            return self.spark.createDataFrame(
+            return self._result(
                 [(d["column"], d["type"], d["not_null"]) for d in self.describe(m.group(1))],
                 "column STRING, type STRING, not_null BOOLEAN",
             )
@@ -406,17 +410,14 @@ class Engine:
         if m:
             name = m.group(1).lower()
             if name == "tables":
-                return self.spark.createDataFrame(
-                    [(t,) for t in self.tables()] or [], "table_name STRING"
-                )
+                return self._result([(t,) for t in self.tables()],
+                                    "table_name STRING")
             if name == "all":
-                return self.spark.createDataFrame(
-                    self.gucs.show_all(), "name STRING, setting STRING"
-                )
+                return self._result(self.gucs.show_all(),
+                                    "name STRING, setting STRING")
             if self.gucs.is_declared(name):
-                return self.spark.createDataFrame(
-                    [(_guc_fmt(self.gucs.show(name)),)], f"{name} STRING"
-                )
+                return self._result([(_guc_fmt(self.gucs.show(name)),)],
+                                    f"{name} STRING")
             # not a GUC → Spark's own SHOW (TABLES/DATABASES/…)
         m = _CREATE_RE.match(text)
         if m:
@@ -462,7 +463,7 @@ class Engine:
             n = copy(name, path, delimiter=o.get("delimiter", ","),
                      null_marker=o.get("null_marker", r"\N"),
                      parallel=o.get("parallel"), csv=o.get("csv", False))
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._result([(n,)], "count BIGINT")
         if re.match(r"^\s*COPY\b", text, re.IGNORECASE):
             raise SqlSyntaxError(f"unsupported COPY syntax: {text.strip()[:80]!r}")
         # every statement below evaluates SQL text: resolve it once
@@ -470,7 +471,7 @@ class Engine:
         m = _CTAS_RE.match(text)
         if m:
             n = self._create_loaded(m.group(1), self.spark.sql(m.group(2)))
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._result([(n,)], "count BIGINT")
         m = _INSERT_RE.match(text)
         if m:
             name, body = m.group(1), m.group(2)
@@ -479,7 +480,7 @@ class Engine:
             schema = T.StructType.fromDDL(self._read_m(name)["schema"])
             # positional column matching, like INSERT without a column list
             n = self.insert(name, src.toDF(*[f.name for f in schema.fields]))
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._result([(n,)], "count BIGINT")
         m = _MERGE_RE.match(text)
         if m:
             name, body, keys = m.group(1), m.group(2), m.group(3)
@@ -494,13 +495,11 @@ class Engine:
                 name, src, [k.strip() for k in keys.split(",")],
                 update=do_update, insert=do_insert,
             )
-            return self.spark.createDataFrame(
-                [(upd, ins)], "updated BIGINT, inserted BIGINT"
-            )
+            return self._result([(upd, ins)], "updated BIGINT, inserted BIGINT")
         m = _DELETE_RE.match(text)
         if m and m.group(1).upper() != "SELECT":
             n = self.delete(m.group(1), m.group(2) or "true")
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._result([(n,)], "count BIGINT")
         m = _UPDATE_RE.match(text)
         if m:
             set_list, where = _split_where(m.group(2))
@@ -509,7 +508,7 @@ class Engine:
                 col, expr = part.split("=", 1)
                 assignments[col.strip()] = expr.strip()
             n = self.update(m.group(1), assignments, where or "true")
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._result([(n,)], "count BIGINT")
         return self.spark.sql(text)
 
     def run_script(self, script: str) -> DataFrame | None:
@@ -839,9 +838,9 @@ class Engine:
         keep: list[str] | None = None,
         *,
         prefix: str = "stg",
-        count: bool = False,
         props_update: dict | None = None,
-    ) -> int:
+        validate: Callable[[], object] | None = None,
+    ) -> tuple[int, int]:
         """The one segment lifecycle behind every load, DML and rewrite:
         stage a segment dir (_stage: marker first), write `df` into it,
         zone-map the new files and publish them — appended, or, given
@@ -849,26 +848,31 @@ class Engine:
         file list. Autocommit swaps the manifest now, optimistically
         against `base_version` (None: the live version once the write is
         done); inside a transaction the change is staged into the
-        pending manifest. Returns the rows written when `count` (counted
-        before the publish renames stg-* → seg-*), else the number of
-        new files."""
+        pending manifest. `validate` (from _observed) runs after the
+        write and before the publish; if it or the write raises, the
+        staged segment is discarded and nothing is published. Returns
+        (rows written, new files), the rows read from the new files'
+        parquet footers."""
         tdir = self._table_dir(name)
-        staging = self._stage(tdir, prefix)
-        df.write.mode("overwrite").parquet(staging)
-        new = [os.path.join(staging, f) for f in os.listdir(staging)
-               if f.endswith(".parquet")]
-        n = len(new)
-        if count:
-            n = self.spark.read.parquet(*new).count() if new else 0
+        segs = [self._stage(tdir, prefix)]
+        try:
+            df.write.mode("overwrite").parquet(segs[0])
+            new = [os.path.join(segs[0], f) for f in os.listdir(segs[0])
+                   if f.endswith(".parquet")]
+            stats, rows = zonemap.collect_file_stats(new)
+            if validate is not None:
+                validate()
+        except Exception:
+            self._discard_segs({"_": {"segs": segs}})
+            raise
         files = new if keep is None else keep + new
-        stats, segs = zonemap.collect_file_stats(new), [staging]
         if self._txn is not None:
             st = self._txn[name.lower()]  # _read_m already staged it
             mf._apply_delta(st["manifest"], files, keep is not None, stats,
                             props_update)
             st["segs"].extend(segs)
             st["dirty"] = True
-            return n
+            return rows, len(new)
         if base_version is None:
             base_version = mf.read_manifest(tdir)["version"]
         # stg-* → seg-* at the last moment before the swap: the
@@ -906,7 +910,47 @@ class Engine:
             raise
         self._unmark_segs({"_": {"segs": segs}})
         self._sync_stream_links(tdir)
-        return n
+        return rows, len(new)
+
+    @staticmethod
+    def _observed(df: DataFrame, m: dict | None = None,
+                  **counts) -> tuple[DataFrame, Callable[[], dict] | None]:
+        """`df` with `counts` (name → aggregate) and, given the manifest
+        `m`, the table's NOT NULL and CHECK violation counts observed in
+        the action that writes it, and `result` (None if nothing is
+        counted), which returns the `counts` once the write has run.
+        Passed to _write_segment as `validate`, it raises on a violation
+        before the publish: check_not_null then check_constraint
+        re-derive the message from `df` without its `__kb_*` flags.
+        Predicates are counted as projected flag columns: an observed
+        aggregate over a subquery predicate fails analysis."""
+        nn, check = (m["not_null"], m["props"].get("check")) if m else ([], None)
+        aggs = {f"__nn{i}": F.count(F.when(F.col(c).isNull(), 1))
+                for i, c in enumerate(nn)}
+        out = df
+        if check:
+            out = df.withColumn("__kb_check", F.expr(check).eqNullSafe(True))
+            aggs["__check"] = F.count(F.when(~F.col("__kb_check"), 1))
+        aggs.update(counts)
+        if not aggs:
+            return df, None
+        obs = Observation()
+        out = out.observe(obs, *[a.alias(k) for k, a in aggs.items()])
+
+        def result() -> dict:
+            got = obs.get
+            bad = [k for k in aggs if k not in counts and got[k]]
+            if bad:
+                rows = df.drop(*[c for c in df.columns if c.startswith("__kb_")])
+                check_not_null(rows, nn)
+                check_constraint(rows, check)
+                # the re-read found none: the input is nondeterministic
+                err = CheckViolation if bad[0] == "__check" else NotNullViolation
+                raise err(f"{sum(got[k] for k in bad)} constraint"
+                          " violation(s) in the written rows")
+            return {k: got[k] for k in counts}
+
+        return out.drop("__kb_check"), result
 
     # -- DDL -----------------------------------------------------------------
     def create_table(
@@ -1133,10 +1177,10 @@ class Engine:
         if parallel:
             df = df.repartition(parallel)
 
+        df, result = self._observed(df, m)
         try:
-            check_not_null(df, m["not_null"])
-            check_constraint(df, m["props"].get("check"))
-            return self._write_segment(name, df, m["version"], count=True)
+            return self._write_segment(name, df, m["version"],
+                                       validate=result)[0]
         except Exception as e:
             # fast-path reader failure → re-derive the reference's counted
             # column-count diagnostic; if counts are clean the failure was
@@ -1166,9 +1210,9 @@ class Engine:
         lossless. Writes `parallel` part-files (Spark tasks — one file
         per worker, the copy_from shape in reverse); `where=` exports a
         zone-map-pruned subset."""
-        df = self.table(name, where=where)
-        n = df.count()
-        out = df.repartition(parallel) if parallel else df
+        out, result = self._observed(self.table(name, where=where),
+                                     rows=F.count(F.lit(1)))
+        out = out.repartition(parallel) if parallel else out
         writer = out.write.mode("overwrite").options(
             delimiter=delimiter,
             nullValue=null_marker,
@@ -1181,7 +1225,7 @@ class Engine:
             # quoted-field dialect is exactly what CSV mode opts into
             writer = writer.option("quote", "")
         writer.csv(path)
-        return n
+        return result()["rows"]
 
     def insert(self, name: str, df: DataFrame,
                props_update: dict | None = None) -> int:
@@ -1190,11 +1234,11 @@ class Engine:
         merges into the table props in the SAME swap (used by the
         streaming sink's batch-id marker — streaming/events.py)."""
         m = self._read_m(name)
-        aligned = self._align(df, _phys_schema(m["schema"]))
-        check_not_null(aligned, m["not_null"])
-        check_constraint(aligned, m["props"].get("check"))
-        return self._write_segment(name, aligned, m["version"], count=True,
-                                   props_update=props_update)
+        aligned, result = self._observed(
+            self._align(df, _phys_schema(m["schema"])), m)
+        return self._write_segment(name, aligned, m["version"],
+                                   props_update=props_update,
+                                   validate=result)[0]
 
     def delete(self, name: str, where: str) -> int:
         """DELETE FROM name WHERE … — copy-on-write: only files that
@@ -1211,12 +1255,12 @@ class Engine:
         touched, untouched, df, m = self._touched_files(name, where)
         if not touched:
             return 0
-        from pyspark.sql import functions as F
-
-        deleted = df.filter(F.expr(where)).count()
-        kept = df.filter(~F.expr(where).eqNullSafe(F.lit(True)))
+        df, result = self._observed(
+            df.withColumn("__kb_m", F.expr(where).eqNullSafe(True)),
+            deleted=F.count(F.when(F.col("__kb_m"), 1)))
+        kept = df.filter(~F.col("__kb_m")).drop("__kb_m")
         self._write_segment(name, kept, m["version"], untouched)
-        return deleted
+        return result()["deleted"]
 
     def update(self, name: str, set: dict[str, str], where: str = "true") -> int:
         """UPDATE name SET col = expr, … WHERE … — copy-on-write over
@@ -1226,15 +1270,12 @@ class Engine:
         touched, untouched, df, m = self._touched_files(name, where)
         if not touched:
             return 0
-        from pyspark.sql import functions as F
-
         schema = _phys_schema(m["schema"])
         bad = set.keys() - {f.name for f in schema.fields}
         if bad:
             raise ValueError(f"unknown columns in SET: {sorted(bad)}")
-        updated = df.filter(F.expr(where)).count()
-        match = F.expr(where).eqNullSafe(F.lit(True))
-        out = df.select(
+        match = F.col("__kb_m")
+        out = df.withColumn("__kb_m", F.expr(where).eqNullSafe(True)).select(
             *[
                 (
                     F.when(match, F.expr(set[f.name]).cast(f.dataType))
@@ -1244,12 +1285,13 @@ class Engine:
                     else F.col(f.name)
                 )
                 for f in schema.fields
-            ]
+            ],
+            match,
         )
-        check_not_null(out, m["not_null"])
-        check_constraint(out, m["props"].get("check"))
-        self._write_segment(name, out, m["version"], untouched)
-        return updated
+        out, result = self._observed(out, m, updated=F.count(F.when(match, 1)))
+        self._write_segment(name, out.drop("__kb_m"), m["version"], untouched,
+                            validate=result)
+        return result()["updated"]
 
     def merge(self, name: str, source: DataFrame, on: list[str],
               update: bool = True, insert: bool = True) -> tuple[int, int]:
@@ -1263,62 +1305,59 @@ class Engine:
         rest carry into the new version untouched.
         Returns (updated, inserted).
 
-        Scale shape: one shuffle join target⋈source on the key to find
-        touched files (metadata-sized result), one anti-join of the
-        touched rows against the source for the rewrite — the standard
-        Delta/Iceberg COW MERGE plan."""
+        Scale shape: one shuffle join target⋈source on the key finds the
+        touched files (a metadata-sized job), then the write: the
+        touched rows anti-joined with the source keys, unioned with the
+        source rows — the standard Delta/Iceberg COW MERGE plan. The
+        write observes the counts (updated = touched − surviving rows)
+        and checks every source row, whichever WHEN clauses are given."""
         if not (update or insert):
             raise ValueError("merge() requires update or insert")
         m = self._read_m(name)
         schema = _phys_schema(m["schema"])
         aligned = self._align(source, schema)
-        check_not_null(aligned, m["not_null"])
-        check_constraint(aligned, m["props"].get("check"))
-
-        full = (
-            self.spark.read.schema(schema).parquet(*m["files"])
-            if m["files"]
-            else self.spark.createDataFrame([], schema)
-        )
+        full = (self.spark.read.schema(schema).parquet(*m["files"])
+                if m["files"] else None)
+        if not update:
+            # WHEN NOT MATCHED only: pure append of new-key source rows —
+            # no target file is rewritten, and the rows written are the
+            # rows inserted (every unmatched source row, duplicate keys
+            # included)
+            src, result = self._observed(aligned, m)
+            if full is not None:
+                src = src.join(full.select(*on), on, "anti")
+            return 0, self._write_segment(name, src, m["version"],
+                                          validate=result)[0]
         # keys stay target-free: the file-hit split below (_split_files)
         # requires a single parquet source in its plan, so the source
         # keyset must not have the target scan in its lineage
         keys = aligned.select(*on).distinct()
-        matched = full.join(keys, on, "semi")  # AQE broadcasts small key sets
-        if not update:
-            # WHEN NOT MATCHED only: pure append of new-key source rows —
-            # no target file is rewritten
-            to_insert = aligned.join(full.select(*on), on, "anti")
-            # count the rows actually appended — with duplicate keys in
-            # the source, every unmatched source row is written, so a
-            # distinct-key count would under-report
-            inserted = to_insert.count()
-            self._write_segment(name, to_insert, m["version"])
-            return 0, inserted
-        updated = matched.count()
-        # rows actually inserted = source rows whose key is absent from
-        # the target (all of them are written below), counted
-        # row-level for the same duplicate-key reason as the insert-only
-        # path — and it's one job where the old key-level form took two
-        inserted = (
-            aligned.join(full.select(*on), on, "anti").count()
-            if insert else 0
-        )
+        touched, untouched = (
+            self._split_files(m["files"], full.join(keys, on, "semi"))
+            if full is not None else ([], []))
+        if touched:
+            scan = self.spark.read.schema(schema).parquet(*touched)
+            seen_scan, seen = self._observed(scan, rows=F.count(F.lit(1)))
+            survivors, kept = self._observed(
+                seen_scan.join(keys, on, "anti"), rows=F.count(F.lit(1)))
+            # the source keys some target row has (AQE broadcasts them)
+            hits = (scan.join(keys, on, "semi").select(*on).distinct()
+                    .withColumn("__kb_hit", F.lit(True)))
+            src = aligned.join(hits, on, "left")
+        else:
+            src = aligned.withColumn("__kb_hit", F.lit(None).cast("boolean"))
+        src, result = self._observed(
+            src, m, inserted=F.count(F.when(F.col("__kb_hit").isNull(), 1)))
         if not insert:
-            # WHEN MATCHED only: restrict the written source rows to keys
-            # present in the target (applied HERE, at write time — the
-            # matched/file-hit plans above must stay single-source)
-            aligned = aligned.join(full.select(*on), on, "semi")
-
-        touched, untouched = self._split_files(m["files"], matched)
-        survivors = (
-            self.spark.read.schema(schema).parquet(*touched).join(keys, on, "anti")
-            if touched
-            else self.spark.createDataFrame([], schema)
-        )
-        self._write_segment(name, survivors.unionByName(aligned),
-                            m["version"], untouched)
-        return updated, inserted
+            # WHEN MATCHED only: write the source rows whose key the
+            # target has (all of them were checked above)
+            src = src.filter(F.col("__kb_hit"))
+        src = src.drop("__kb_hit")
+        self._write_segment(
+            name, survivors.unionByName(src) if touched else src,
+            m["version"], untouched, validate=result)
+        updated = seen()["rows"] - kept()["rows"] if touched else 0
+        return updated, result()["inserted"] if insert else 0
 
     def _touched_files(self, name: str, where: str):
         """Split the current snapshot's files into (touched, untouched) by
@@ -1333,8 +1372,6 @@ class Engine:
         validating against it would let a file list derived from the OLD
         snapshot replace the new one, silently dropping the concurrent
         commit's files."""
-        from pyspark.sql import functions as F
-
         m = self._read_m(name)
         if not m["files"]:
             return [], [], None, m
@@ -1356,8 +1393,6 @@ class Engine:
         file also matches on the decoded path part."""
         from urllib.parse import unquote, urlparse
 
-        from pyspark.sql import functions as F
-
         uris = {r["__f"] for r in hits.select(
             F.input_file_name().alias("__f")).distinct().collect()}
         hit = uris | {unquote(urlparse(u).path) for u in uris if "://" in u}
@@ -1368,8 +1403,6 @@ class Engine:
         """ANALYZE: collect table statistics (row count, per-column
         null count / min / max / approx NDV) into the manifest props —
         the PG ANALYZE analog over immutable snapshots."""
-        from pyspark.sql import functions as F
-
         df = self.table(name)
         schema = df.schema
         aggs: list = [F.count(F.lit(1)).alias("__rows")]
@@ -1401,7 +1434,7 @@ class Engine:
                        if f not in m.get("stats_by_file", {})]
             if missing:
                 m.setdefault("stats_by_file", {}).update(
-                    zonemap.collect_file_stats(missing)
+                    zonemap.collect_file_stats(missing)[0]
                 )
 
         mf.update_props(tdir, _apply)
@@ -1571,7 +1604,7 @@ class Engine:
         else:
             df = df.coalesce(target_files)
         return self._write_segment(name, df, m["version"], [],
-                                   prefix="compact")
+                                   prefix="compact")[1]
 
     _Z_BITS = 4  # 16 equi-depth buckets per z-ordered column
 
@@ -1581,8 +1614,6 @@ class Engine:
         (2^bits − 1) numbers per column reach the driver. Bucket lookup
         is a JVM-side fold over the literal boundary array; interleaving
         is integer shifts — the whole z-value stays in codegen."""
-        from pyspark.sql import functions as F
-
         nb = 1 << self._Z_BITS
         probs = [i / nb for i in range(1, nb)]
         ncols = len(cols)
@@ -1845,18 +1876,27 @@ class Engine:
                     (t, f.name, f.dataType.simpleString(),
                      f.name in m["not_null"], i + 1)
                 )
-        self.spark.createDataFrame(
-            tables_rows or [], "relname STRING, version INT, n_files INT,"
-                               " reloptions STRING"
+        self._result(
+            tables_rows, "relname STRING, version INT, n_files INT,"
+                         " reloptions STRING"
         ).createOrReplaceTempView("kb_tables")
-        self.spark.createDataFrame(
-            cols_rows or [], "relname STRING, attname STRING, atttype STRING,"
-                             " attnotnull BOOLEAN, attnum INT"
+        self._result(
+            cols_rows, "relname STRING, attname STRING, atttype STRING,"
+                       " attnotnull BOOLEAN, attnum INT"
         ).createOrReplaceTempView("kb_columns")
-        from kuibadb_spark.gucs import GUCS, _fmt as _gfmt
-
-        self.spark.createDataFrame(
-            [(n, _gfmt(self.gucs.show(n)), GUCS[n][0], GUCS[n][1])
+        self._result(
+            [(n, _guc_fmt(self.gucs.show(n)), GUCS[n][0], GUCS[n][1])
              for n in sorted(GUCS)],
             "name STRING, setting STRING, vartype STRING, context STRING",
         ).createOrReplaceTempView("kb_settings")
+
+    def _result(self, rows: list[tuple], ddl: str) -> DataFrame:
+        """`rows` as a local Arrow-backed frame with the declared `ddl`
+        schema: command tags, SHOW/DESCRIBE results and the kb_* views.
+        Building and collecting it runs no Spark job, where a Python
+        list goes through parallelize and a Python worker."""
+        schema = T.StructType.fromDDL(ddl)
+        cols = list(zip(*rows)) or [()] * len(schema.fields)
+        return self.spark.createDataFrame(
+            pa.table([pa.array(list(c)) for c in cols], names=schema.names),
+            schema)

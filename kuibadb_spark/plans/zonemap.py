@@ -30,15 +30,19 @@ import re
 _STATTYPES = (int, float, str)
 
 
-def collect_file_stats(files: list[str]) -> dict:
-    """{file -> {col -> [min, max]}} for int/float/string columns with
-    parquet statistics. Columns with missing/odd-typed stats are omitted
+def collect_file_stats(files: list[str]) -> tuple[dict, int]:
+    """({file -> {col -> [min, max]}}, total rows) from the footers: the
+    zone maps for int/float/string columns with parquet statistics, and
+    the files' row count (a writer's affected-row count, with no re-read
+    of the data). Columns with missing/odd-typed stats are omitted
     (omitted ⇒ never pruned on)."""
     import pyarrow.parquet as pq
 
     out: dict = {}
+    rows = 0
     for path in files:
         md = pq.ParquetFile(path).metadata
+        rows += md.num_rows
         per_col: dict = {}
         ok: set = set()
         for rg in range(md.num_row_groups):
@@ -64,7 +68,7 @@ def collect_file_stats(files: list[str]) -> dict:
                     per_col[name][0] = min(per_col[name][0], st.min)
                     per_col[name][1] = max(per_col[name][1], st.max)
         out[path] = per_col
-    return out
+    return out, rows
 
 
 # ---------------------------------------------------------------------------
